@@ -468,6 +468,14 @@ def make_adts(n_frames: int, rate_idx: int = 4, channels: int = 2,
 
 # -------------------------------------------------------- avcC / hvcC --
 
+def _u16_prefixed(rec: bytes, pos: int) -> tuple[bytes, int]:
+    """Big-endian u16 length-prefixed field at ``pos`` -> (field, next pos)."""
+    end = pos + 2 + int.from_bytes(rec[pos:pos + 2], "big")
+    if pos + 2 > len(rec) or end > len(rec):
+        raise ValueError("truncated record")
+    return rec[pos + 2:end], end
+
+
 def parse_avcc(avcc: bytes) -> dict:
     """AVCDecoderConfigurationRecord (ISO 14496-15 §5.3.3.1) -> profile/
     level + parsed first SPS (the stream-level truth an MP4 carries)."""
@@ -477,9 +485,8 @@ def parse_avcc(avcc: bytes) -> dict:
     pos = 6
     sps_list = []
     for _ in range(n_sps):
-        (ln,) = struct.unpack(">H", avcc[pos:pos + 2])
-        sps_list.append(avcc[pos + 2:pos + 2 + ln])
-        pos += 2 + ln
+        sps, pos = _u16_prefixed(avcc, pos)
+        sps_list.append(sps)
     out = {"profile_idc": avcc[1], "level_idc": avcc[3],
            "sps": sps_list, "codec": "h264"}
     if sps_list:
@@ -505,14 +512,15 @@ def parse_hvcc(hvcc: bytes) -> dict:
     pos = 23
     sps_list = []
     for _ in range(n_arrays):
+        if pos + 3 > len(hvcc):
+            raise ValueError("truncated record")
         nal_type = hvcc[pos] & 0x3F
         (n_nalus,) = struct.unpack(">H", hvcc[pos + 1:pos + 3])
         pos += 3
         for _ in range(n_nalus):
-            (ln,) = struct.unpack(">H", hvcc[pos:pos + 2])
+            nal, pos = _u16_prefixed(hvcc, pos)
             if nal_type == 33:
-                sps_list.append(hvcc[pos + 2:pos + 2 + ln])
-            pos += 2 + ln
+                sps_list.append(nal)
     out = {"profile_idc": hvcc[1] & 0x1F, "level_idc": hvcc[12],
            "sps": sps_list, "codec": "h265"}
     if sps_list:

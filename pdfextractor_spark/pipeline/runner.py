@@ -2,8 +2,10 @@
 
 pages -> bronze (text extraction) -> silver (structuring) -> gold aggregates,
 each stage committed as an Iceberg snapshot when a catalog is configured
-(parquet + lineage side-table in this sandbox — see pipeline.tableio); an
-interrupted run resumes from the last complete stage via the J7 anti-join.
+(parquet + lineage side-table otherwise — see pipeline.tableio). Bronze and
+silver are keyed stages of ``lineage.write_stage``: an interrupted run
+appends only the urls a stage lacks (the J7 anti-join), and a silver built
+under another ``mode``/``bmp_filter`` is rebuilt, never appended to.
 """
 
 from __future__ import annotations
@@ -19,36 +21,11 @@ from .gold import (
     gold_lang_rollup, gold_pattern_usage, reextract_candidates,
     silver_anomaly_summary,
 )
-from .lineage import resume_remaining, write_stage
+from .lineage import config_fingerprint, write_stage
 from .silver import extract_silver
-from .tableio import (
-    checkpoint_format,
-    iceberg_catalog,
-    read_checkpoint,
-    table_identifier,
-    write_checkpoint,
-)
+from .tableio import write_checkpoint
 
 __all__ = ["run_pipeline"]
-
-
-def _stage_ref(spark: SparkSession, path: str) -> tuple[str, str]:
-    """Resolve where a stage checkpoint lives under the active format."""
-    if checkpoint_format() == "iceberg":
-        cat = iceberg_catalog(spark)
-        if cat is not None:
-            return ("table", table_identifier(cat, path))
-    return ("path", path)
-
-
-def _exists(spark: SparkSession, ref: tuple[str, str]) -> bool:
-    kind, target = ref
-    if kind == "table":
-        return spark.catalog.tableExists(target)
-    # local-fs check is fine in this sandbox; on a cluster use the Hadoop FS API
-    return os.path.exists(target) and (os.path.exists(os.path.join(target, "_SUCCESS")) or any(
-        f.endswith(".parquet") for f in os.listdir(target)
-    ))
 
 
 def run_pipeline(spark: SparkSession, pages_df: DataFrame, out_dir: str,
@@ -56,37 +33,20 @@ def run_pipeline(spark: SparkSession, pages_df: DataFrame, out_dir: str,
                  resume: bool = True) -> dict:
     """Run pages->bronze->silver->gold. Returns timing + counts summary."""
     os.makedirs(out_dir, exist_ok=True)
-    bronze_path = os.path.join(out_dir, "bronze")
-    silver_path = os.path.join(out_dir, "silver")
-    bronze_ref = _stage_ref(spark, bronze_path)
-    silver_ref = _stage_ref(spark, silver_path)
     t0 = time.time()
     timings: dict[str, float] = {}
 
-    if resume and _exists(spark, bronze_ref):
-        done = read_checkpoint(spark, bronze_ref)
-        todo = resume_remaining(pages_df, done, key="url")
-        n_todo = todo.count()
-        if n_todo > 0:
-            write_checkpoint(extract_bronze(todo), bronze_path, mode="append")
-    else:
-        write_stage(extract_bronze(pages_df), bronze_path, "bronze")
-    bronze = read_checkpoint(spark, bronze_ref)
+    bronze_stage = write_stage(pages_df, os.path.join(out_dir, "bronze"), "bronze",
+                               extract_bronze, key="url", resume=resume)
+    bronze = bronze_stage.df
     timings["bronze_sec"] = time.time() - t0
 
     t1 = time.time()
-    if resume and _exists(spark, silver_ref):
-        done = read_checkpoint(spark, silver_ref)
-        todo = resume_remaining(bronze, done, key="url")
-        if todo.limit(1).count() > 0:
-            write_checkpoint(
-                extract_silver(todo, mode=mode, bmp_filter=bmp_filter),
-                silver_path, mode="append",
-            )
-    else:
-        write_stage(extract_silver(bronze, mode=mode, bmp_filter=bmp_filter), silver_path,
-                    "silver", bytes_col="report_json")
-    silver = read_checkpoint(spark, silver_ref)
+    silver = write_stage(
+        bronze_stage, os.path.join(out_dir, "silver"), "silver",
+        lambda df: extract_silver(df, mode=mode, bmp_filter=bmp_filter),
+        config_fingerprint(mode=mode, bmp_filter=bmp_filter),
+        key="url", resume=resume, bytes_col="report_json").df
     timings["silver_sec"] = time.time() - t1
 
     t2 = time.time()
@@ -105,17 +65,17 @@ def run_pipeline(spark: SparkSession, pages_df: DataFrame, out_dir: str,
         write_checkpoint(df, os.path.join(out_dir, f"gold_{name}"), mode="overwrite")
     timings["gold_sec"] = time.time() - t2
 
-    n_docs = bronze.count()
-    n_errors = bronze.where("error is not null").count()
-    match = bronze.selectExpr(
+    totals = bronze.selectExpr(
+        "count(*) as n",
+        "sum(case when error is not null then 1 else 0 end) as e",
         "sum(case when text_match then 1 else 0 end) as m",
         "sum(case when text_match is not null then 1 else 0 end) as t",
     ).first()
     timings["total_sec"] = time.time() - t0
     return {
-        "docs": n_docs,
-        "errors": n_errors,
-        "byte_identical_matched": int(match["m"] or 0),
-        "byte_identical_total": int(match["t"] or 0),
+        "docs": totals["n"],
+        "errors": int(totals["e"] or 0),
+        "byte_identical_matched": int(totals["m"] or 0),
+        "byte_identical_total": int(totals["t"] or 0),
         **{k: round(v, 3) for k, v in timings.items()},
     }

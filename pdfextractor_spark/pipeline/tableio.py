@@ -31,6 +31,7 @@ from __future__ import annotations
 import hashlib
 import os
 import re
+import shutil
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,6 +42,9 @@ __all__ = [
     "checkpoint_format",
     "write_checkpoint",
     "read_checkpoint",
+    "checkpoint_ref",
+    "checkpoint_exists",
+    "drop_checkpoint",
 ]
 
 _NAMESPACE = "graft"
@@ -175,3 +179,33 @@ def read_checkpoint(spark: SparkSession, ref: tuple[str, str]) -> DataFrame:
     if kind == "table":
         return spark.table(target)
     return spark.read.parquet(target)
+
+
+def checkpoint_ref(spark: SparkSession, path: str) -> tuple[str, str]:
+    """Where the checkpoint for ``path`` lives under the active format, as
+    the ``(kind, target)`` reference :func:`write_checkpoint` returns."""
+    if checkpoint_format() == "iceberg":
+        cat = iceberg_catalog(spark)
+        if cat is not None:
+            return ("table", table_identifier(cat, path))
+    return ("path", path)
+
+
+def checkpoint_exists(spark: SparkSession, ref: tuple[str, str]) -> bool:
+    """Whether a complete checkpoint exists at ``ref``."""
+    kind, target = ref
+    if kind == "table":
+        return spark.catalog.tableExists(target)
+    # a local-filesystem probe; a cluster object store needs the Hadoop FS API
+    return os.path.exists(target) and (os.path.exists(os.path.join(target, "_SUCCESS")) or any(
+        f.endswith(".parquet") for f in os.listdir(target)
+    ))
+
+
+def drop_checkpoint(spark: SparkSession, ref: tuple[str, str]) -> None:
+    """Remove the checkpoint at ``ref``; a missing one is not an error."""
+    kind, target = ref
+    if kind == "table":
+        spark.sql(f"DROP TABLE IF EXISTS {target}")
+    else:
+        shutil.rmtree(target, ignore_errors=True)

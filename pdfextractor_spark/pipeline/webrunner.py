@@ -2,40 +2,30 @@
 
 ``pipeline.webclean`` declares the 14-stage cleaning plan as one lazy
 DataFrame — the right shape for a single pass, but a 100 TB preparation
-run does not execute as one job: it checkpoints at the stage boundaries
-so a failure (or a re-crawl delta) resumes instead of recomputing days
-of work. This module is the corpus-prep analogue of ``pipeline.runner``
-(the medallion bronze->silver->gold runner): the same format-dispatched
-checkpoints (Iceberg snapshot commits when a catalog is configured,
-parquet + ``_lineage`` side-tables in this sandbox) around the three
-natural phases of the pipeline:
+run checkpoints at stage boundaries so a failure (or a re-crawl delta)
+resumes instead of recomputing days of work. This is the corpus-prep
+analogue of ``pipeline.runner``: one ``lineage.write_stage`` call per
+natural phase of the pipeline:
 
-1. ``cleaned``  — the PER-DOCUMENT prefix (url dedup, robots gate,
-   extraction, C4, Gopher repetition). Keyed by url, so an interrupted
-   or incremental run resumes via the J7 anti-join: only urls absent
-   from the checkpoint are recomputed, and their rows append. (Per-doc
-   config — robots policy, badwords, extract — is therefore NOT
-   retroactive on resume: already-checkpointed rows keep the verdicts
-   they were built under; changing it needs a fresh ``out_dir``.)
-2. ``flagged``  — the CORPUS-GLOBAL cleaning stages (line dedup, quality
+1. ``cleaned`` — the PER-DOCUMENT prefix (url dedup, robots gate,
+   extraction, C4, Gopher repetition), keyed by url: a resumed or
+   incremental run appends only the urls absent from the checkpoint.
+2. ``flagged`` — the CORPUS-GLOBAL cleaning stages (line dedup, quality
    stats, exact content dedup, decontamination, PII, NB gate) ending in
-   the ``keep`` flag. Global operators aggregate over the whole corpus,
-   so this phase is all-or-nothing: it is skipped on resume only while
-   its recorded input row count still matches the ``cleaned``
-   checkpoint (an upstream append invalidates it), recomputed otherwise.
-3. ``corpus``   — SELECTION/ASSEMBLY (keep filter, per-host cap, DSIR
-   resample, shard packing), revalidated against ``flagged`` the same
-   way. The one-row ``prep_report`` accounting lands next to it as
+   the ``keep`` flag; all-or-nothing, count-validated against ``cleaned``.
+3. ``corpus`` — SELECTION/ASSEMBLY (keep filter, per-host cap, DSIR
+   resample, shard packing), count-validated against ``flagged``. The
+   one-row ``prep_report`` accounting lands next to it as
    ``gold_prep_report``.
 
-The validity rule is deliberately the simplest sufficient one: a phase's
-output is current iff its input row count AND its config fingerprint are
-unchanged. Row count is cheap at any scale (metadata-only on
-parquet/Iceberg) and catches every append/truncation the runner itself
-can produce; the fingerprint catches a resumed run whose stage config
-changed (enabling semdedup, retuning quality_floor) — without it the
-runner would silently serve output built under the old config. Both
-false-positive only toward recomputation — never toward staleness.
+One validity rule, stored in each phase's ``_lineage`` table: a phase is
+reused only while its chained ``config_fp`` matches — it covers every
+upstream phase's config, so e.g. a new ``unicode_form`` rebuilds all
+three — and, for the two global phases, its ``input_rows`` too. The
+fingerprint is taken over the very arguments the phase is built with;
+DataFrame and model values enter it as type markers, so swapping e.g. the
+robots table for another is not detected. Both checks err only toward
+recomputation, never toward a stale serve.
 """
 
 from __future__ import annotations
@@ -44,66 +34,12 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .lineage import resume_remaining, write_stage
-from .runner import _exists, _stage_ref
-from .tableio import read_checkpoint, write_checkpoint
+from .lineage import config_fingerprint, write_stage
+from .tableio import checkpoint_ref, read_checkpoint, write_checkpoint
 from .webclean import _flag_stages, _perdoc_stages, _select_stages, prep_report
 
 __all__ = ["run_corpus_prep"]
-
-
-def _config_fp(**params) -> str:
-    """Deterministic fingerprint of a phase's semantics-affecting config.
-    DataFrame/model values can't be fingerprinted cheaply — callers pass
-    a presence marker (bool) for those, so SWAPPING e.g. the benchmark
-    table without changing row counts is (documented) not detected, but
-    ENABLING/disabling/retuning any stage is."""
-    import hashlib
-
-    def _norm(v):
-        if isinstance(v, dict):
-            return {k: _norm(x) for k, x in sorted(v.items())}
-        if isinstance(v, (list, tuple)):
-            return [_norm(x) for x in v]
-        if isinstance(v, (set, frozenset)):
-            return sorted(map(repr, v))
-        return v if isinstance(v, (int, float, str, bool, type(None))) \
-            else f"<{type(v).__name__}>"
-
-    return hashlib.sha1(repr(_norm(params)).encode()).hexdigest()[:16]
-
-
-def _write_meta(spark: SparkSession, path: str, input_rows: int,
-                config_fp: str) -> None:
-    import pandas as pd
-
-    write_checkpoint(
-        spark.createDataFrame(
-            pd.DataFrame({"input_rows": [input_rows],
-                          "config_fp": [config_fp]}),
-            schema="input_rows long, config_fp string"),
-        path, mode="overwrite")
-
-
-def _meta_current(spark: SparkSession, path: str, input_rows: int,
-                  config_fp: str) -> bool:
-    """A phase output is current iff BOTH its recorded input row count
-    and its config fingerprint match — a resumed run with a changed
-    stage config (e.g. enabling semdedup) must recompute, not silently
-    serve output built under the old config. Metas written before the
-    fingerprint existed lack the column and read as stale (one-time
-    recompute, never a stale serve)."""
-    ref = _stage_ref(spark, path)
-    if not _exists(spark, ref):
-        return False
-    meta = read_checkpoint(spark, ref)
-    if "config_fp" not in meta.columns:
-        return False
-    rows = meta.collect()
-    return bool(rows) and int(rows[0]["input_rows"]) == input_rows \
-        and rows[0]["config_fp"] == config_fp
 
 
 def run_corpus_prep(
@@ -138,110 +74,61 @@ def run_corpus_prep(
     stage timings, row counts, resume bookkeeping, and the prep_report
     accounting row."""
     os.makedirs(out_dir, exist_ok=True)
-    cleaned_path = os.path.join(out_dir, "cleaned")
-    flagged_path = os.path.join(out_dir, "flagged")
-    corpus_path = os.path.join(out_dir, "corpus")
-    cleaned_ref = _stage_ref(spark, cleaned_path)
-    flagged_ref = _stage_ref(spark, flagged_path)
-    corpus_ref = _stage_ref(spark, corpus_path)
     summary: dict = {}
     t0 = time.time()
 
-    def _perdoc(df: DataFrame) -> DataFrame:
-        return _perdoc_stages(df, extract=extract, url_col=url_col,
-                              url_quality=url_quality,
-                              ts_col=ts_col, text_col=text_col,
-                              robots=robots, badwords=badwords,
-                              filter_rows=True, extract_mode=extract_mode,
-                              unicode_form=unicode_form)
-
     # --- phase 1: per-document prefix, url-resumable ----------------------
-    # config gate BEFORE the url anti-join: appending rows extracted under
-    # a different classifier/normal form to an old checkpoint would mix
-    # semantics silently — a changed config forces a full rebuild
-    clean_fp = _config_fp(extract=extract, extract_mode=extract_mode,
-                          unicode_form=unicode_form,
-                          robots=robots is not None, badwords=badwords,
-                          url_quality=url_quality)
-    clean_cfg_ok = _meta_current(spark, cleaned_path + "_cfg", 0, clean_fp)
-    if resume and clean_cfg_ok and _exists(spark, cleaned_ref):
-        done = read_checkpoint(spark, cleaned_ref)
-        todo = resume_remaining(pages, done, key=url_col)
-        n_todo = todo.count()
-        if n_todo > 0:
-            write_checkpoint(_perdoc(todo), cleaned_path, mode="append")
-        summary["cleaned_appended"] = n_todo
-    else:
-        write_stage(_perdoc(pages), cleaned_path, "cleaned",
-                    bytes_col=text_col)
-        _write_meta(spark, cleaned_path + "_cfg", 0, clean_fp)
-        summary["cleaned_appended"] = -1  # full build
-    cleaned = read_checkpoint(spark, cleaned_ref)
-    n_cleaned = cleaned.count()
-    summary["cleaned_rows"] = n_cleaned
+    perdoc_cfg = dict(extract=extract, extract_mode=extract_mode,
+                      unicode_form=unicode_form, robots=robots,
+                      badwords=badwords, url_quality=url_quality)
+    cleaned = write_stage(
+        pages, os.path.join(out_dir, "cleaned"), "cleaned",
+        lambda df: _perdoc_stages(df, url_col=url_col, ts_col=ts_col,
+                                  text_col=text_col, filter_rows=True,
+                                  **perdoc_cfg),
+        config_fingerprint(**perdoc_cfg),
+        key=url_col, resume=resume, bytes_col=text_col)
+    summary["cleaned_appended"] = -1 if cleaned.action == "rebuilt" else cleaned.added
+    summary["cleaned_rows"] = cleaned.rows
     summary["cleaned_sec"] = round(time.time() - t0, 3)
 
-    # --- phase 2: corpus-global flags, count+config-validated -------------
+    # --- phase 2: corpus-global flags, count-validated --------------------
     t1 = time.time()
-    flag_fp = _config_fp(
-        benchmark=benchmark is not None,
-        host_boilerplate=host_boilerplate,
+    flag_cfg = dict(
+        benchmark=benchmark, host_boilerplate=host_boilerplate,
         dup_line_min_count=dup_line_min_count,
         dedup_span_width=dedup_span_width, quality_floor=quality_floor,
-        compression_band=compression_band,
-        redact=redact, bpe=bpe_merges is not None, nb_filter=nb_filter,
-        langid=langid,  # _norm maps the model/priors to type markers,
-                        # every scalar tunable fingerprints automatically
-        semdedup=semdedup, want_wcid=(nb_filter is not None
-                                      or dsir is not None
-                                      or langid is not None))
-    flagged_current = (resume and _meta_current(
-        spark, flagged_path + "_meta", n_cleaned, flag_fp))
-    if not flagged_current:
-        flagged_df = _flag_stages(
-            cleaned, url_col=url_col, text_col=text_col,
-            benchmark=benchmark, robots_flagged=False,
-            host_boilerplate=host_boilerplate,
-            dup_line_min_count=dup_line_min_count,
-            dedup_span_width=dedup_span_width,
-            quality_floor=quality_floor,
-            compression_band=compression_band, redact=redact,
-            bpe_merges=bpe_merges, nb_filter=nb_filter,
-            langid_cfg=langid, semdedup_cfg=semdedup,
-            want_wcid=(nb_filter is not None or dsir is not None
-                       or langid is not None))
-        write_stage(flagged_df, flagged_path, "flagged", bytes_col=text_col)
-        _write_meta(spark, flagged_path + "_meta", n_cleaned, flag_fp)
-    summary["flagged_recomputed"] = not flagged_current
-    flagged = read_checkpoint(spark, flagged_ref)
-    n_flagged = flagged.count()
-    summary["flagged_rows"] = n_flagged
+        compression_band=compression_band, redact=redact,
+        bpe_merges=bpe_merges, nb_filter=nb_filter, langid_cfg=langid,
+        semdedup_cfg=semdedup,
+        want_wcid=nb_filter is not None or dsir is not None or langid is not None)
+    flagged = write_stage(
+        cleaned, os.path.join(out_dir, "flagged"), "flagged",
+        lambda df: _flag_stages(df, url_col=url_col, text_col=text_col,
+                                robots_flagged=False, **flag_cfg),
+        config_fingerprint(**flag_cfg), resume=resume, bytes_col=text_col)
+    summary["flagged_recomputed"] = flagged.action == "rebuilt"
+    summary["flagged_rows"] = flagged.rows
     summary["flagged_sec"] = round(time.time() - t1, 3)
 
     # --- phase 3: selection/assembly + accounting, count-validated --------
     t2 = time.time()
-    sel_fp = _config_fp(
-        max_docs_per_host=max_docs_per_host, bpe=bpe_merges is not None,
-        dsir=dsir, shard_budget=shard_budget)
-    corpus_current = (resume and _meta_current(
-        spark, corpus_path + "_meta", n_flagged, sel_fp))
-    if not corpus_current:
-        corpus_df = _select_stages(
-            flagged, url_col=url_col, text_col=text_col,
-            max_docs_per_host=max_docs_per_host, bpe_merges=bpe_merges,
-            dsir=dsir, shard_budget=shard_budget)
-        write_stage(corpus_df, corpus_path, "corpus", bytes_col=text_col)
-        _write_meta(spark, corpus_path + "_meta", n_flagged, sel_fp)
-        write_checkpoint(prep_report(flagged, text_col=text_col),
-                         os.path.join(out_dir, "gold_prep_report"),
-                         mode="overwrite")
-    summary["corpus_recomputed"] = not corpus_current
-    corpus = read_checkpoint(spark, corpus_ref)
-    summary["corpus_rows"] = corpus.count()
+    select_cfg = dict(max_docs_per_host=max_docs_per_host,
+                      bpe_merges=bpe_merges, dsir=dsir,
+                      shard_budget=shard_budget)
+    corpus = write_stage(
+        flagged, os.path.join(out_dir, "corpus"), "corpus",
+        lambda df: _select_stages(df, url_col=url_col, text_col=text_col,
+                                  **select_cfg),
+        config_fingerprint(**select_cfg), resume=resume, bytes_col=text_col)
+    report_path = os.path.join(out_dir, "gold_prep_report")
+    if corpus.action == "rebuilt":
+        write_checkpoint(prep_report(flagged.df, text_col=text_col),
+                         report_path, mode="overwrite")
+    summary["corpus_recomputed"] = corpus.action == "rebuilt"
+    summary["corpus_rows"] = corpus.rows
     summary["corpus_sec"] = round(time.time() - t2, 3)
-    report = read_checkpoint(
-        spark, _stage_ref(spark, os.path.join(out_dir, "gold_prep_report"))
-    ).collect()[0].asDict()
+    report = read_checkpoint(spark, checkpoint_ref(spark, report_path)).collect()[0].asDict()
     summary["prep_report"] = {k: (int(v) if v is not None else 0)
                               for k, v in report.items()}
     summary["total_sec"] = round(time.time() - t0, 3)

@@ -217,6 +217,24 @@ def test_avcc_hvcc_records_round_trip():
         parse_hvcc(b"\x00" * 10)
 
 
+def test_truncated_codec_private_records_return_none():
+    """A length prefix that runs past the end of an avcC/hvcC record is a
+    truncated record: the parser raises ValueError and the dispatcher
+    returns None instead of letting struct.error/IndexError escape."""
+    avcc = b"\x01\x00\x00\x00\x00\xe1\x01"
+    with pytest.raises(ValueError, match="truncated record"):
+        parse_avcc(avcc)
+    assert stream_dims_from_codec_private("avcC", avcc) is None
+    full = make_avcc(make_h264_sps(854, 480))
+    for cut in range(7, len(full) - 1):  # the trailing PPS count is unread
+        assert stream_dims_from_codec_private("avcC", full[:cut]) is None
+    full5 = make_hvcc(make_h265_sps(1366, 768))
+    for cut in range(23, len(full5)):
+        with pytest.raises(ValueError, match="truncated record"):
+            parse_hvcc(full5[:cut])
+        assert stream_dims_from_codec_private("hvcC", full5[:cut]) is None
+
+
 def test_struct_pack_sanity():
     # the records use big-endian u16 lengths throughout
     assert struct.pack(">H", 854) == bytes([3, 86])

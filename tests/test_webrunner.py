@@ -86,6 +86,9 @@ def test_run_corpus_prep_resume_is_noop_and_incremental(spark, tmp_path):
     third = run_corpus_prep(spark, _pages(spark, n=40), out, **kw)
     assert third["cleaned_appended"] == 10
     assert third["cleaned_rows"] == 40
+    # the appended stage's lineage describes all of it, not the first run
+    lin = spark.read.parquet(os.path.join(out, "cleaned_lineage"))
+    assert lin.agg(F.sum("doc_count")).first()[0] == 40
     assert third["flagged_recomputed"] and third["corpus_recomputed"]
     # the resumed run converges to the from-scratch result
     scratch = prepare_training_corpus(_pages(spark, n=40),
@@ -120,8 +123,11 @@ def test_resume_recomputes_on_config_change(spark, tmp_path):
 def test_phase1_config_change_forces_full_rebuild(spark, tmp_path):
     """Changing a per-document-phase config (unicode_form here) across a
     resumed run must REBUILD the cleaned checkpoint — appending rows
-    extracted under a different config would silently mix semantics."""
-    pages = _pages(spark)
+    extracted under a different config would silently mix semantics —
+    and the rebuild must reach the corpus-global phases downstream."""
+    # "e" + COMBINING ACUTE ACCENT: NFC composes it to one code point
+    pages = _pages(spark).withColumn(
+        "text", F.concat("text", F.lit(" The cafe\u0301 menu lists tea.")))
     out = str(tmp_path / "run")
     kw = dict(extract=False, dup_line_min_count=None)
     run_corpus_prep(spark, pages, out, **kw)
@@ -133,3 +139,27 @@ def test_phase1_config_change_forces_full_rebuild(spark, tmp_path):
     assert s3["cleaned_appended"] == -1
     assert "unicode_changed" in \
         spark.read.parquet(out + "/cleaned").columns
+    assert s3["flagged_recomputed"] and s3["corpus_recomputed"]
+    expected = prepare_training_corpus(pages, filter_rows=True,
+                                       unicode_form="NFC", **kw)
+    got = spark.read.parquet(os.path.join(out, "corpus"))
+    assert _collect(got) == _collect(expected)
+
+
+def test_same_size_flagged_rebuild_reaches_corpus(spark, tmp_path):
+    """New urls that copy existing texts rebuild ``flagged`` (its input
+    grew) but leave its row count unchanged: the exact content dedup now
+    keeps the new, lexically smaller url of each copy. The corpus built
+    from the old flagged rows must not be served as current."""
+    out = str(tmp_path / "run")
+    kw = dict(extract=False, dup_line_min_count=None)
+    rehost = F.regexp_replace("url", "https://site", "https://zsite")
+    run_corpus_prep(spark, _pages(spark, n=20).withColumn("url", rehost), out, **kw)
+    pages = _pages(spark, n=20).withColumn("url", rehost) \
+        .unionByName(_pages(spark, n=5))  # same texts, urls sort first
+    s2 = run_corpus_prep(spark, pages, out, **kw)
+    assert s2["cleaned_appended"] == 5 and s2["flagged_recomputed"]
+    assert s2["flagged_rows"] == 20 and s2["corpus_recomputed"]
+    expected = prepare_training_corpus(pages, filter_rows=True, **kw)
+    got = spark.read.parquet(os.path.join(out, "corpus"))
+    assert _collect(got) == _collect(expected)
