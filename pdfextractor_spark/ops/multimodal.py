@@ -797,12 +797,11 @@ def _media_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 def decode_media(media_df: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """Binary media -> typed features. Salted repartition on media_id hash
-    (large blobs skew exactly like large documents)."""
-    from ..pipeline.arrowtune import autosize_arrow_batch
-
+    (large blobs skew exactly like large documents). Arrow input batches
+    are bounded by Spark's ``maxBytesPerBatch`` (64 MiB, set in
+    ``session.py``), so a batch of multi-MB blobs cannot OOM a worker."""
     spark = media_df.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism * 2
-    autosize_arrow_batch(media_df, ["payload"])
     salted = media_df.repartition(n, F.xxhash64("media_id"))
     return salted.mapInPandas(_media_batches, schema=MEDIA_FEATURES_SCHEMA)
 
@@ -876,8 +875,8 @@ def sample_frames(media_df: DataFrame, every_nth: int = 10,
     Compressed bitstream codecs (H.26x/AAC) yield per-frame error rows.
     One output row per sampled frame; corrupt containers produce a single
     error row, never a job failure. Same scale plumbing as decode_media:
-    Arrow batch autosizing + salted repartition on media_id hash."""
-    from ..pipeline.arrowtune import autosize_arrow_batch
+    Arrow input batches bounded by Spark's ``maxBytesPerBatch`` (64 MiB,
+    set in ``session.py``) + salted repartition on media_id hash."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in FRAME_SAMPLE_SCHEMA.fields]
@@ -900,6 +899,5 @@ def sample_frames(media_df: DataFrame, every_nth: int = 10,
     spark = media_df.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism * 2
     vids = media_df.where(F.col("kind") == "video").select("media_id", "payload")
-    autosize_arrow_batch(vids, ["payload"])
     salted = vids.repartition(n, F.xxhash64("media_id"))
     return salted.mapInPandas(batches, schema=FRAME_SAMPLE_SCHEMA)

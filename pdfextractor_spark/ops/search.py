@@ -30,6 +30,10 @@ __all__ = ["tokenize_query", "bm25_search", "bm25_search_batch"]
 
 _TOKEN_RX = r"[a-z0-9]+"
 
+# Most queries a DataFrame input to ``bm25_search_batch`` may hold: they are
+# collected to the driver and re-broadcast as the (query_id, term) table.
+MAX_BATCH_QUERIES = 100_000
+
 
 def tokenize_query(query: str) -> list[str]:
     """Deterministic query analysis: lowercase alnum runs, first
@@ -117,7 +121,8 @@ def bm25_search_batch(docs: DataFrame, queries, *, id_col: str = "doc_id",
 
     ``queries``: ``[(query_id, query_string), ...]`` (or a dict). The
     query workload is driver-small by definition; a DataFrame input is
-    collected (bounded) first. Duplicate ``(query_id, term)`` pairs
+    collected first and must hold at most ``MAX_BATCH_QUERIES`` rows
+    (``ValueError`` otherwise). Duplicate ``(query_id, term)`` pairs
     collapse, matching ``tokenize_query``'s distinct-term semantics.
 
     Plan (the 1/Q-scan fix for the single-query op's one-scan-per-query
@@ -140,7 +145,10 @@ def bm25_search_batch(docs: DataFrame, queries, *, id_col: str = "doc_id",
     the top-k PER QUERY (rank window partitioned by query_id — never a
     global sort)."""
     if isinstance(queries, DataFrame):
-        queries = [(r[0], r[1]) for r in queries.collect()]
+        queries = [(r[0], r[1]) for r in queries.limit(MAX_BATCH_QUERIES + 1).collect()]
+        if len(queries) > MAX_BATCH_QUERIES:
+            raise ValueError(f"bm25_search_batch: query DataFrame holds more than "
+                             f"MAX_BATCH_QUERIES={MAX_BATCH_QUERIES} rows")
     elif isinstance(queries, dict):
         queries = list(queries.items())
     spark = docs.sparkSession

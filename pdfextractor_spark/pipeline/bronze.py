@@ -110,11 +110,8 @@ def extract_bronze(pages_df: DataFrame, num_partitions: int | None = None,
         # fail fast: a typo silently running the wrong classifier over a
         # 100 TB corpus is far worse than an error at plan time
         raise ValueError(f"unknown html_mode {html_mode!r} (default|density)")
-    from .arrowtune import autosize_arrow_batch
-
     spark = pages_df.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism * 2
-    autosize_arrow_batch(pages_df, ["html", "text"])
     salted = pages_df.repartition(n, F.xxhash64("url"))
     return salted.mapInPandas(_bronze_batches_factory(html_mode),
                               schema=BRONZE_SCHEMA)

@@ -75,10 +75,7 @@ def extract_fused(pages_df: DataFrame, num_partitions: int | None = None,
 
     Salted repartition on xxhash64(url) defuses large-document skew exactly
     as in the staged path."""
-    from .arrowtune import autosize_arrow_batch
-
     spark = pages_df.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism * 2
-    autosize_arrow_batch(pages_df, ["html", "text"])
     salted = pages_df.select("url", "html", "text", "lang").repartition(n, F.xxhash64("url"))
     return salted.mapInPandas(_fused_batches_factory(mode, bmp_filter), schema=FUSED_SCHEMA)

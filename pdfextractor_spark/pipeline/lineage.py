@@ -86,8 +86,7 @@ def stage_lineage(df: DataFrame, stage: str, error_col: str = "error",
     )
 
 
-def resume_remaining(input_df: DataFrame, done_df: DataFrame, key: str = "url",
-                     broadcast_threshold: int | None = 1_000_000) -> DataFrame:
+def resume_remaining(input_df: DataFrame, done_df: DataFrame, key: str = "url") -> DataFrame:
     """J7: input rows not yet present in the completed stage output.
 
     The done-side is pruned to the join key before the anti-join so only the

@@ -149,8 +149,5 @@ def _silver_batches_factory(mode: str, bmp_filter: bool, classify: bool = False)
 
 def extract_silver(bronze_df: DataFrame, mode: str = "exact", bmp_filter: bool = False,
                    classify: bool = False) -> DataFrame:
-    from .arrowtune import autosize_arrow_batch
-
     cols = bronze_df.select("url", "lang", "raw_text")
-    autosize_arrow_batch(cols, ["raw_text"])
     return cols.mapInPandas(_silver_batches_factory(mode, bmp_filter, classify), schema=SILVER_SCHEMA)

@@ -140,6 +140,23 @@ def test_bm25_batch_matches_single_query_runs(spark):
     assert bm25_search_batch(docs, [("q", "!!!")]).count() == 0
 
 
+def test_bm25_batch_query_dataframe_is_bounded(spark, monkeypatch):
+    """A query DataFrame is collected to the driver: more rows than
+    MAX_BATCH_QUERIES raise, exactly MAX_BATCH_QUERIES pass."""
+    import pytest
+
+    from pdfextractor_spark.ops import search
+
+    monkeypatch.setattr(search, "MAX_BATCH_QUERIES", 3)
+    docs = spark.createDataFrame([("d1", "alpha beta")], "doc_id string, text string")
+    qs = [("q1", "alpha"), ("q2", "beta"), ("q3", "gamma"), ("q4", "alpha beta")]
+    at_cap = spark.createDataFrame(qs[:3], "query_id string, q string")
+    assert search.bm25_search_batch(docs, at_cap).count() == 2
+    over = spark.createDataFrame(qs, "query_id string, q string")
+    with pytest.raises(ValueError, match="MAX_BATCH_QUERIES=3"):
+        search.bm25_search_batch(docs, over)
+
+
 def test_bm25_batch_plan_one_scan_no_text_shuffle(spark):
     """The batch plan reads the corpus text ONCE for scoring (plus the
     1-row stats agg — zero with corpus_stats supplied), filters exploded

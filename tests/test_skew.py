@@ -2,6 +2,7 @@
 document tail so no partition holds a disproportionate byte share — the
 property that keeps a 1000-executor stage from stalling on one task."""
 
+import pandas as pd
 import pyspark.sql.functions as F
 
 from pdfextractor_spark.corpus import generate_pages
@@ -31,8 +32,9 @@ def test_salted_repartition_spreads_skew_tail(spark):
 def test_arrow_batch_autosizes_for_huge_docs(spark):
     """Multi-MB documents must shrink the Arrow batch row count at runtime:
     1024 rows x 10 MB would be a ~10 GB in-flight batch (the executor-OOM
-    mode on a mixed 100 TB corpus). The pipeline probes payload size and
-    retargets ~64 MB per batch; the job must complete at DEFAULT settings."""
+    mode on a mixed 100 TB corpus). Spark's ``maxBytesPerBatch`` (64 MiB,
+    set in session.py) caps each batch by its real bytes; the job must
+    complete at DEFAULT settings."""
     from pdfextractor_spark.pipeline.fused import extract_fused
 
     # ~10 MB html payloads: distinct punctuation-free paragraphs (one
@@ -53,32 +55,47 @@ def test_arrow_batch_autosizes_for_huge_docs(spark):
     out = silver.select("url", "error", "n_chars").collect()
     assert len(out) == 6 and all(r["error"] is None for r in out)
     assert all(r["n_chars"] > 5_000_000 for r in out)
-    # the probe must have lowered the batch ceiling far below the default
-    chosen = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-    assert chosen <= 16, chosen
-    # restore the session default for subsequent tests
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
+
+    # observed batches: 10 x ~10 MB rows in ONE partition (~100 MB, more
+    # than one 64 MiB batch) reach the UDF in batches of at most 64 MiB
+    # plus the row that crossed the cap
+    row_bytes = 10 << 20
+
+    def batch_bytes(batches):
+        for pdf in batches:
+            yield pd.DataFrame({"rows": [len(pdf)],
+                                "bytes": [int(pdf["s"].str.len().sum())]})
+
+    big = spark.range(10, numPartitions=1).select(
+        F.expr(f"repeat('x', {row_bytes})").alias("s"))
+    seen = big.mapInPandas(batch_bytes, "rows long, bytes long").collect()
+    assert sum(r["rows"] for r in seen) == 10 and len(seen) > 1, seen
+    assert all(r["bytes"] <= (64 << 20) + row_bytes for r in seen), seen
 
 
-def test_arrow_probe_memoized_per_source(spark, tmp_path):
-    """The batch-size probe is a per-TABLE tuning decision: two stages over
-    the same source must share one probe job (the probe otherwise shows up
-    as fixed per-job overhead in repeated-run throughput measurements)."""
-    import time
+def test_stage_construction_leaves_session_confs_alone(spark):
+    """Building a stage is lazy and must not rewrite session-wide settings:
+    Spark reads them when a job RUNS, so a stage that set one at build time
+    would decide it for every later Arrow operation in the session."""
+    from pdfextractor_spark.ops.multimodal import MEDIA_SCHEMA, decode_media, sample_frames
+    from pdfextractor_spark.pipeline.fused import extract_fused
+    from pdfextractor_spark.pipeline.silver import extract_silver
 
-    from pdfextractor_spark.pipeline.arrowtune import _PROBE_CACHE, autosize_arrow_batch
-
-    path = str(tmp_path / "pages.parquet")
-    pages = spark.createDataFrame(generate_pages(64), schema=PAGES_SCHEMA)
-    pages.write.parquet(path)
-    _PROBE_CACHE.clear()
-    r1 = autosize_arrow_batch(spark.read.parquet(path), ["html", "text"])
-    t0 = time.perf_counter()
-    r2 = autosize_arrow_batch(spark.read.parquet(path), ["html", "text"])
-    cached_sec = time.perf_counter() - t0
-    assert r1 == r2 and len(_PROBE_CACHE) == 1
-    assert cached_sec < 0.5  # dict probe, no Spark job
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "512")
+    try:
+        pages = spark.createDataFrame(generate_pages(8), schema=PAGES_SCHEMA)
+        media = spark.createDataFrame(
+            [(1, "image", bytearray(b"P5 2 2 255\n\x00\x01\x02\x03"), "image/x-portable-graymap")],
+            schema=MEDIA_SCHEMA)
+        extract_fused(pages, num_partitions=2)
+        extract_silver(extract_bronze(pages, num_partitions=2))
+        decode_media(media, num_partitions=2)
+        sample_frames(media, num_partitions=2)
+        assert spark.conf.get(key) == "512"
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_unsalted_input_order_would_clump(spark):
