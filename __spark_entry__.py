@@ -697,27 +697,6 @@ def q_extract_pattern_usage(spark, sf_dir):
     )
 
 
-def q_pages_pipeline_smoke(spark, sf_dir):
-    """Full pages->bronze run over an in-memory synthetic corpus: per-parser
-    doc counts, failure counts, byte-identical match rate."""
-    from pdfextractor_spark.corpus import generate_pages
-    from pdfextractor_spark.pipeline.bronze import extract_bronze
-    from pdfextractor_spark.pipeline.schema import PAGES_SCHEMA
-
-    pages = spark.createDataFrame(generate_pages(120), schema=PAGES_SCHEMA)
-    bronze = extract_bronze(pages, num_partitions=8)
-    return (
-        bronze.groupBy("parser")
-        .agg(
-            F.count(F.lit(1)).alias("docs"),
-            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("failures"),
-            F.sum(F.when(F.col("text_match"), 1).otherwise(0)).alias("byte_identical"),
-            F.sum(F.when(F.col("text_match").isNotNull(), 1).otherwise(0)).alias("parity_rows"),
-        )
-        .orderBy("parser")
-    )
-
-
 def q_minhash_lsh_pairs(spark, sf_dir):
     """Bound-flag oracle scheme: identical-text pairs hash to identical
     minhash signatures, hence identical bands, hence MUST appear in the LSH
@@ -760,19 +739,6 @@ def q_simhash_near_dups(spark, sf_dir):
     eq = sym_diff.agg((F.count(F.lit(1)) == 0).alias("bucketed_equals_bruteforce"))
     n = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     return n.crossJoin(eq)
-
-
-def q_ngram_jaccard_verify(spark, sf_dir):
-    from pdfextractor_spark.ops.dedup import minhash_lsh_pairs, minhash_signatures, ngram_jaccard_pairs
-
-    docs = _t(spark, sf_dir, "documents")
-    sigs = minhash_signatures(docs, num_hashes=32, shingle_k=3)
-    pairs = minhash_lsh_pairs(sigs, num_bands=8, sig_len=32)
-    verified = ngram_jaccard_pairs(docs, pairs, n=3, threshold=0.5)
-    return verified.agg(
-        F.count(F.lit(1)).cast("long").alias("verified_pairs"),
-        F.round(F.coalesce(F.avg("jaccard"), F.lit(0.0)), 4).alias("avg_jaccard"),
-    )
 
 
 def q_ann_lsh_topk(spark, sf_dir):
@@ -886,8 +852,8 @@ def q_near_dedup_clusters(spark, sf_dir):
 
 
 def q_ngram_jaccard_allpairs(spark, sf_dir):
-    """Exact all-pairs trigram Jaccard (brute-force oracle twin of the
-    LSH-candidate path in q_ngram_jaccard_verify)."""
+    """Exact all-pairs trigram Jaccard (brute-force twin of the
+    LSH-candidate path that q_near_dedup_clusters verifies)."""
     from pdfextractor_spark.ops.dedup import ngram_jaccard_pairs
 
     docs = _t(spark, sf_dir, "documents")

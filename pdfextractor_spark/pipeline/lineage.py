@@ -1,9 +1,11 @@
-"""Checkpointed stages: per-partition lineage and the one resume rule.
+"""Checkpointed stages: one lineage row per commit and the one resume rule.
 
 The reference persists ``*.state.json`` with processed/remaining lists after
 every chunk (backend/scripts/chunked_mdeq_extraction.js:107-166); here each
-checkpointed stage carries a ``_lineage`` table (stage, partition id, doc
-count, bytes, failures, config fingerprint, input row count) from which
+checkpointed stage carries a ``_lineage`` table with one row per commit
+(stage, action, doc count, bytes, failures, config fingerprint, input row
+count), counted by the write job itself: a ``rebuilt`` row, then an
+``appended`` row per keyed resume that adds rows. From it
 :func:`write_stage` decides, whole stage or nothing, to keep, append or
 rebuild:
 
@@ -16,9 +18,9 @@ rebuild:
   changed input reaches every later stage, even one whose row count it
   leaves as it was.
 
-Both err only toward recomputation: a lineage without ``config_fp`` reads as
-stale, and a rebuild drops the old lineage before it overwrites the data,
-which is always written before the new lineage.
+Both err only toward recomputation: a lineage without ``action`` (an older
+layout) reads as stale, and a rebuild drops the old lineage before it
+overwrites the data, which is always written before the new lineage row.
 """
 
 from __future__ import annotations
@@ -27,15 +29,14 @@ import hashlib
 from typing import Callable, NamedTuple
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from . import tableio
 
-__all__ = ["Stage", "config_fingerprint", "stage_lineage", "resume_remaining",
-           "write_stage"]
+__all__ = ["Stage", "config_fingerprint", "resume_remaining", "write_stage"]
 
-_LINEAGE_SCHEMA = ("stage string, partition_id int, doc_count long, bytes long, "
+_LINEAGE_SCHEMA = ("stage string, action string, doc_count long, bytes long, "
                    "failures long, config_fp string, input_rows long")
 
 
@@ -67,25 +68,6 @@ def config_fingerprint(**params) -> str:
     return hashlib.sha1(repr(_norm(params)).encode()).hexdigest()[:16]
 
 
-def stage_lineage(df: DataFrame, stage: str, error_col: str = "error",
-                  bytes_col: str = "raw_text") -> DataFrame:
-    """Per-partition rollup: (stage, partition_id, doc_count, bytes, failures)."""
-    base = df.withColumn("partition_id", F.spark_partition_id())
-    byts = (F.sum(F.length(F.col(bytes_col))) if bytes_col in df.columns else F.lit(0)).alias("bytes")
-    fails = (F.sum(F.when(F.col(error_col).isNotNull(), 1).otherwise(0))
-             if error_col in df.columns else F.lit(0)).alias("failures")
-    return (
-        base.groupBy("partition_id")
-        .agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            byts,
-            fails,
-        )
-        .select(F.lit(stage).alias("stage"), "partition_id", "doc_count",
-                F.coalesce(F.col("bytes"), F.lit(0)).alias("bytes"), "failures")
-    )
-
-
 def resume_remaining(input_df: DataFrame, done_df: DataFrame, key: str = "url") -> DataFrame:
     """J7: input rows not yet present in the completed stage output.
 
@@ -94,6 +76,23 @@ def resume_remaining(input_df: DataFrame, done_df: DataFrame, key: str = "url") 
     runtime from actual size."""
     done_keys = done_df.select(key).distinct()
     return input_df.join(done_keys, on=key, how="left_anti")
+
+
+def _write_counted(df: DataFrame, path: str, mode: str, error_col: str,
+                   bytes_col: str) -> dict:
+    """Write ``df`` as the checkpoint at ``path``; return the rows, bytes and
+    failures the write job itself counted. The observation is the frame's
+    last operator, so it runs in the write's result stage, where Spark
+    applies each task's update once: a retried task cannot count twice."""
+    obs = Observation()
+    byts = (F.coalesce(F.sum(F.length(bytes_col)), F.lit(0))
+            if bytes_col in df.columns else F.lit(0))
+    fails = F.count(error_col) if error_col in df.columns else F.lit(0)
+    tableio.write_checkpoint(
+        df.observe(obs, F.count(F.lit(1)).alias("rows"), byts.alias("bytes"),
+                   fails.alias("failures")),
+        path, mode=mode)
+    return obs.get
 
 
 def write_stage(x: DataFrame | Stage, path: str, stage: str,
@@ -123,7 +122,7 @@ def write_stage(x: DataFrame | Stage, path: str, stage: str,
     if resume and tableio.checkpoint_exists(spark, ref) \
             and tableio.checkpoint_exists(spark, lin_ref):
         lin = tableio.read_checkpoint(spark, lin_ref)
-        if "config_fp" in lin.columns:
+        if "action" in lin.columns:
             rec = lin.agg(F.max("config_fp").alias("fp"),
                           F.sum("doc_count").alias("rows")).first()
     if rec is not None and rec["fp"] == fp:
@@ -131,24 +130,28 @@ def write_stage(x: DataFrame | Stage, path: str, stage: str,
         if key is None:
             return Stage(tableio.read_checkpoint(spark, ref), before, "kept", 0, fp)
         todo = resume_remaining(src, tableio.read_checkpoint(spark, ref), key=key)
-        tableio.write_checkpoint(build(todo), path, mode="append")
+        counts = _write_counted(build(todo), path, "append", error_col, bytes_col)
+        written = tableio.read_checkpoint(spark, ref)
+        # the total comes from the checkpoint (a metadata count), not from
+        # lineage + delta: rows a crashed run appended without its lineage
+        # row are skipped by the anti-join, so only this counts them
+        added = written.count() - before
+        if added == 0:
+            return Stage(written, before, "kept", 0, fp)
+        action, mode = "appended", "append"
     else:
-        before = None
         tableio.drop_checkpoint(spark, lin_ref)
-        tableio.write_checkpoint(build(src), path, mode="overwrite")
+        counts = _write_counted(build(src), path, "overwrite", error_col, bytes_col)
+        written, before, added, action, mode = None, 0, counts["rows"], "rebuilt", "overwrite"
 
-    written = tableio.read_checkpoint(spark, ref)
-    parts = stage_lineage(written, stage, error_col=error_col, bytes_col=bytes_col).collect()
-    rows = sum(p["doc_count"] for p in parts)
-    if rows == before:
-        return Stage(written, rows, "kept", 0, fp)
-    # an empty stage still records one row, so its fingerprint persists.
-    # From pandas the rows travel as Arrow; from a list they would start a
+    # From pandas the row travels as Arrow; from a list it would start a
     # Python-worker job, about 1 s per stage
-    lineage = pd.DataFrame([(*p, fp, input_rows) for p in parts]
-                           or [(stage, None, 0, 0, 0, fp, input_rows)])
-    tableio.write_checkpoint(spark.createDataFrame(lineage, _LINEAGE_SCHEMA).coalesce(1),
-                             lin_path, mode="overwrite")
-    if before is None:
-        return Stage(written, rows, "rebuilt", rows, fp)
-    return Stage(written, rows, "appended", rows - before, fp)
+    row = pd.DataFrame([(stage, action, added, counts["bytes"], counts["failures"],
+                         fp, input_rows)])
+    tableio.write_checkpoint(spark.createDataFrame(row, _LINEAGE_SCHEMA).coalesce(1),
+                             lin_path, mode=mode)
+    # a rebuild reads its data back only now: a parquet read runs a schema
+    # job, and none runs between the data write and the row vouching for it
+    if written is None:
+        written = tableio.read_checkpoint(spark, ref)
+    return Stage(written, before + added, action, added, fp)

@@ -117,11 +117,3 @@ SILVER_SCHEMA = StructType([
     StructField("report_json", StringType()),
     StructField("error", StringType()),
 ])
-
-LINEAGE_SCHEMA = StructType([
-    StructField("stage", StringType()),
-    StructField("partition_id", IntegerType()),
-    StructField("doc_count", LongType()),
-    StructField("bytes", LongType()),
-    StructField("failures", LongType()),
-])

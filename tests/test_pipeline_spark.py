@@ -9,7 +9,8 @@ import pytest
 from pdfextractor_spark.corpus import generate_pages
 from pdfextractor_spark.pipeline.bronze import extract_bronze
 from pdfextractor_spark.pipeline.fused import extract_fused
-from pdfextractor_spark.pipeline.lineage import resume_remaining, stage_lineage
+from pdfextractor_spark.pipeline import tableio
+from pdfextractor_spark.pipeline.lineage import resume_remaining, write_stage
 from pdfextractor_spark.pipeline.schema import PAGES_SCHEMA, SILVER_SCHEMA
 from pdfextractor_spark.pipeline.silver import extract_silver
 
@@ -62,11 +63,41 @@ def test_fused_equals_staged_pipeline(spark, pages, bronze):
     assert s == f
 
 
-def test_lineage_counts(spark, bronze):
-    lin = stage_lineage(bronze, stage="bronze").collect()
-    assert all(r["stage"] == "bronze" for r in lin)
+def test_lineage_counts(spark, pages, bronze, tmp_path):
+    # the runner's bronze write: one lineage row, counted by the write job
+    out = str(tmp_path / "bronze")
+    write_stage(pages, out, "bronze", extract_bronze, key="url")
+    lin = spark.read.parquet(f"{out}_lineage").collect()
+    assert [(r["stage"], r["action"]) for r in lin] == [("bronze", "rebuilt")]
     assert sum(r["doc_count"] for r in lin) == 130
     assert sum(r["failures"] for r in lin) >= 1  # corrupt docs counted
+    assert lin[0]["bytes"] == bronze.agg(F.sum(F.length("raw_text"))).first()[0]
+
+
+def test_write_stage_runs_no_job_past_the_lineage_write(spark, tmp_path):
+    """A fresh ``write_stage`` runs at most one job more than a plain
+    checkpoint write of the same frame and the read that hands it back
+    (parquet infers the schema in a job): the lineage write. Its counts
+    come from the data write itself, not from a scan of what it wrote."""
+    sc = spark.sparkContext
+    df = spark.createDataFrame([(f"u{i}", "x" * i, None) for i in range(40)],
+                               "url string, raw_text string, error string")
+
+    def jobs(group, write):
+        sc.setJobGroup(group, group)
+        try:
+            write()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    plain = jobs(f"plain-{tmp_path.name}", lambda: tableio.read_checkpoint(
+        spark, tableio.write_checkpoint(df, str(tmp_path / "plain"))))
+    staged = jobs(f"stage-{tmp_path.name}",
+                  lambda: write_stage(df, str(tmp_path / "stage"), "s", lambda d: d,
+                                      key="url"))
+    assert plain >= 1
+    assert staged <= plain + 1, (staged, plain)
 
 
 def test_resume_anti_join(spark, pages, bronze):

@@ -7,8 +7,15 @@ import pyspark.sql.functions as F
 
 from pdfextractor_spark.corpus import generate_pages
 from pdfextractor_spark.pipeline.bronze import extract_bronze
-from pdfextractor_spark.pipeline.lineage import stage_lineage
 from pdfextractor_spark.pipeline.schema import PAGES_SCHEMA
+
+
+def _partition_bytes(df):
+    """(doc_count, bytes) of ``raw_text`` in each partition of ``df``."""
+    return (df.groupBy(F.spark_partition_id().alias("p"))
+            .agg(F.count(F.lit(1)).alias("doc_count"),
+                 F.coalesce(F.sum(F.length("raw_text")), F.lit(0)).alias("bytes"))
+            .collect())
 
 
 def test_salted_repartition_spreads_skew_tail(spark):
@@ -16,7 +23,7 @@ def test_salted_repartition_spreads_skew_tail(spark):
     pages = spark.createDataFrame(generate_pages(808), schema=PAGES_SCHEMA)
     n_parts = 16
     bronze = extract_bronze(pages, num_partitions=n_parts)
-    lin = stage_lineage(bronze, stage="bronze").collect()
+    lin = _partition_bytes(bronze)
     bytes_per = sorted(r["bytes"] for r in lin)
     assert len(bytes_per) == n_parts
     total = sum(bytes_per)
@@ -113,7 +120,7 @@ def test_unsalted_input_order_would_clump(spark):
         lambda p: sum(p)
     ).collect()
     salted = extract_bronze(pages, num_partitions=n_parts)
-    lin = stage_lineage(salted, stage="x").collect()
+    lin = _partition_bytes(salted)
     salted_max_share = max(r["bytes"] for r in lin) / max(sum(r["bytes"] for r in lin), 1)
     order_max_share = max(by_order) / max(sum(by_order), 1)
     # salting must beat input-order partitioning on the adversarial layout

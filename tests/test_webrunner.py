@@ -1,7 +1,7 @@
 """Checkpoint/resume for the corpus-prep runner (pipeline/webrunner.py).
 
 Mirrors the medallion runner's contract (north rule: resumable from
-checkpoint with per-partition lineage + metrics): the per-document phase
+checkpoint with one lineage row per commit): the per-document phase
 resumes by url anti-join, the corpus-global phases revalidate against
 their recorded input row count, and the end-to-end result matches the
 single-pass ``prepare_training_corpus`` declaration.
@@ -44,6 +44,12 @@ def _collect(df, cols=("url", "text")):
     return sorted(tuple(r[c] for c in cols) for r in df.select(*cols).collect())
 
 
+def _lineage_rows(spark, out):
+    """(action, doc_count) of each commit of the ``cleaned`` stage."""
+    return _collect(spark.read.parquet(os.path.join(out, "cleaned_lineage")),
+                    ("action", "doc_count"))
+
+
 def test_run_corpus_prep_matches_single_pass(spark, tmp_path):
     pages = _pages(spark)
     robots = (_robots(spark), "trainingbot")
@@ -80,6 +86,7 @@ def test_run_corpus_prep_resume_is_noop_and_incremental(spark, tmp_path):
     assert second["cleaned_appended"] == 0
     assert not second["flagged_recomputed"] and not second["corpus_recomputed"]
     assert second["corpus_rows"] == first["corpus_rows"]
+    assert _lineage_rows(spark, out) == [("rebuilt", 30)]
 
     # incremental input: only the 10 new urls run the per-doc phase, and
     # the count change invalidates (recomputes) the global phases
@@ -89,8 +96,34 @@ def test_run_corpus_prep_resume_is_noop_and_incremental(spark, tmp_path):
     # the appended stage's lineage describes all of it, not the first run
     lin = spark.read.parquet(os.path.join(out, "cleaned_lineage"))
     assert lin.agg(F.sum("doc_count")).first()[0] == 40
+    # one lineage row per commit: the build, then the append
+    assert _lineage_rows(spark, out) == [("appended", 10), ("rebuilt", 30)]
     assert third["flagged_recomputed"] and third["corpus_recomputed"]
     # the resumed run converges to the from-scratch result
+    scratch = prepare_training_corpus(_pages(spark, n=40),
+                                      filter_rows=True, **kw)
+    got = spark.read.parquet(os.path.join(out, "corpus"))
+    assert _collect(got) == _collect(scratch)
+
+
+def test_rows_appended_without_a_lineage_row_still_count(spark, tmp_path):
+    """A run that crashed after appending to ``cleaned`` but before writing
+    its lineage row: the rerun's anti-join skips those rows, so the stage
+    total must come from the checkpoint, or the global phases would keep
+    the flagged stage built from 30 rows."""
+    out = str(tmp_path / "run")
+    kw = dict(extract=False, dup_line_min_count=None, max_docs_per_host=100)
+    run_corpus_prep(spark, _pages(spark, n=30), out, **kw)
+    # the crashed run's append: per-doc output of 10 new urls, no lineage
+    side = str(tmp_path / "side")
+    run_corpus_prep(spark, _pages(spark, n=10, start=30), side, **kw)
+    spark.read.parquet(os.path.join(side, "cleaned")).write.mode("append") \
+        .parquet(os.path.join(out, "cleaned"))
+
+    res = run_corpus_prep(spark, _pages(spark, n=40), out, **kw)
+    assert res["cleaned_rows"] == 40
+    assert res["flagged_recomputed"]
+    assert _lineage_rows(spark, out) == [("appended", 10), ("rebuilt", 30)]
     scratch = prepare_training_corpus(_pages(spark, n=40),
                                       filter_rows=True, **kw)
     got = spark.read.parquet(os.path.join(out, "corpus"))
