@@ -569,6 +569,7 @@ def q_gold_bmp_dedupe(spark, sf_dir):
     de-pluralize) and keep the max-confidence row per canonical name."""
     from pdfextractor_spark.corpus import generate_pages
     from pdfextractor_spark.pipeline.fused import extract_fused
+    from pdfextractor_spark.pipeline.gold import gold_bmp_dedupe
     from pdfextractor_spark.pipeline.schema import PAGES_SCHEMA
 
     path = f"{_ORACLE_MAT_DIR}/bmps_flat.parquet"
@@ -581,32 +582,9 @@ def q_gold_bmp_dedupe(spark, sf_dir):
         )
         bmps.write.mode("overwrite").parquet(path)
         _MAT_BUILT.add(path)
-    return gold_bmp_dedupe_from_flat(spark.read.parquet(path))
-
-
-def gold_bmp_dedupe_from_flat(b):
-    canon0 = F.regexp_replace(F.regexp_replace(F.regexp_replace(
-        F.trim(F.lower(F.col("name"))), r"\s+", " "), r"[,:;]+$", ""), r"\((feet|ft)\)", "(ft)")
-    b = b.withColumn("canon0", canon0)
-    singular = F.expr("substring(canon0, 1, length(canon0) - 1)")
-    canon = F.when(
-        F.col("canon0").rlike(r"^[a-z0-9 \-()\/]{4,}$")
-        & F.col("canon0").endswith("s")
-        & (F.length("canon0") > 4)
-        & (F.length("canon0") - 1 > 3),
-        singular,
-    ).otherwise(F.col("canon0"))
-    w = Window.partitionBy("canon").orderBy(F.col("confidence").desc_nulls_last(), F.col("name"))
-    return (
-        b.withColumn("canon", canon)
-        .drop("canon0")
-        .where(F.col("canon") != "")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("rn")
-        .withColumn("confidence", F.round("confidence", 6))
-        .orderBy("canon")
-    )
+    return (gold_bmp_dedupe(spark.read.parquet(path))
+            .withColumn("confidence", F.round("confidence", 6))
+            .orderBy("canon"))
 
 
 def q_extract_reports(spark, sf_dir):

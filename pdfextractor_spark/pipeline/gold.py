@@ -357,14 +357,12 @@ def silver_anomaly_summary(silver: DataFrame) -> DataFrame:
     )
 
 
-def gold_bmp_dedupe(silver: DataFrame) -> DataFrame:
-    """Cross-corpus BMP dedupe by canonical name keeping max confidence (W3).
-    Canonicalization is expressed natively: lowercase, collapse whitespace,
-    strip trailing punctuation, (feet)->(ft), naive de-pluralization."""
-    b = silver.select(F.explode("bmps").alias("b")).select(
-        F.col("b.name").alias("name"), F.col("b.category").alias("category"),
-        F.col("b.confidence").alias("confidence"),
-    )
+def gold_bmp_dedupe(b: DataFrame) -> DataFrame:
+    """Cross-corpus BMP dedupe by canonical name keeping max confidence (W3),
+    over the flat ``(name, category, confidence)`` rows of silver's exploded
+    ``bmps``. Canonicalization is expressed natively: lowercase, collapse
+    whitespace, strip trailing punctuation, (feet)->(ft), naive
+    de-pluralization."""
     canon0 = F.regexp_replace(F.regexp_replace(F.regexp_replace(
         F.trim(F.lower(F.col("name"))), r"\s+", " "), r"[,:;]+$", ""), r"\((feet|ft)\)", "(ft)")
     b = b.withColumn("canon0", canon0)

@@ -105,33 +105,31 @@ def write_stage(x: DataFrame | Stage, path: str, stage: str,
     (its fingerprint, and for a count-validated stage its row count, chain
     into this one's). ``build`` maps input rows to stage rows. With ``key``
     the stage is keyed, without it count-validated, which needs an upstream
-    :class:`Stage`; ``resume=False`` always rebuilds. Storage is
-    format-dispatched (``pipeline.tableio``): Iceberg snapshot commits when a
-    catalog is configured, parquet otherwise.
+    :class:`Stage`; ``resume=False`` always rebuilds. ``pipeline.tableio``
+    places ``path``: an Iceberg table when the session has an Iceberg
+    catalog, a parquet directory otherwise.
     """
     src, upstream_fp = (x.df, x.config_fp) if isinstance(x, Stage) else (x, "")
     # a keyed stage is validated by its keys, a count-validated one by counts
     input_rows = None if key is not None else x.rows
     spark = src.sparkSession
     fp = config_fingerprint(upstream=upstream_fp, config=config_fp, input_rows=input_rows)
-    ref = tableio.checkpoint_ref(spark, path)
     lin_path = path.rstrip("/") + "_lineage"
-    lin_ref = tableio.checkpoint_ref(spark, lin_path)
 
     rec = None
-    if resume and tableio.checkpoint_exists(spark, ref) \
-            and tableio.checkpoint_exists(spark, lin_ref):
-        lin = tableio.read_checkpoint(spark, lin_ref)
+    if resume and tableio.checkpoint_exists(spark, path) \
+            and tableio.checkpoint_exists(spark, lin_path):
+        lin = tableio.read_checkpoint(spark, lin_path)
         if "action" in lin.columns:
             rec = lin.agg(F.max("config_fp").alias("fp"),
                           F.sum("doc_count").alias("rows")).first()
     if rec is not None and rec["fp"] == fp:
         before = int(rec["rows"])
         if key is None:
-            return Stage(tableio.read_checkpoint(spark, ref), before, "kept", 0, fp)
-        todo = resume_remaining(src, tableio.read_checkpoint(spark, ref), key=key)
+            return Stage(tableio.read_checkpoint(spark, path), before, "kept", 0, fp)
+        todo = resume_remaining(src, tableio.read_checkpoint(spark, path), key=key)
         counts = _write_counted(build(todo), path, "append", error_col, bytes_col)
-        written = tableio.read_checkpoint(spark, ref)
+        written = tableio.read_checkpoint(spark, path)
         # the total comes from the checkpoint (a metadata count), not from
         # lineage + delta: rows a crashed run appended without its lineage
         # row are skipped by the anti-join, so only this counts them
@@ -140,7 +138,7 @@ def write_stage(x: DataFrame | Stage, path: str, stage: str,
             return Stage(written, before, "kept", 0, fp)
         action, mode = "appended", "append"
     else:
-        tableio.drop_checkpoint(spark, lin_ref)
+        tableio.drop_checkpoint(spark, lin_path)
         counts = _write_counted(build(src), path, "overwrite", error_col, bytes_col)
         written, before, added, action, mode = None, 0, counts["rows"], "rebuilt", "overwrite"
 
@@ -153,5 +151,5 @@ def write_stage(x: DataFrame | Stage, path: str, stage: str,
     # a rebuild reads its data back only now: a parquet read runs a schema
     # job, and none runs between the data write and the row vouching for it
     if written is None:
-        written = tableio.read_checkpoint(spark, ref)
+        written = tableio.read_checkpoint(spark, path)
     return Stage(written, before + added, action, added, fp)

@@ -1,11 +1,12 @@
 """End-to-end medallion run with checkpoint/resume.
 
 pages -> bronze (text extraction) -> silver (structuring) -> gold aggregates,
-each stage committed as an Iceberg snapshot when a catalog is configured
-(parquet + lineage side-table otherwise — see pipeline.tableio). Bronze and
-silver are keyed stages of ``lineage.write_stage``: an interrupted run
-appends only the urls a stage lacks (the J7 anti-join), and a silver built
-under another ``mode``/``bmp_filter`` is rebuilt, never appended to.
+each stage committed as an Iceberg snapshot when the session has an Iceberg
+catalog and as a parquet directory otherwise (see pipeline.tableio). Bronze
+and silver are keyed stages of ``lineage.write_stage``, each with a
+``_lineage`` table next to it: an interrupted run appends only the urls a
+stage lacks (the J7 anti-join), and a silver built under another
+``mode``/``bmp_filter`` is rebuilt, never appended to.
 """
 
 from __future__ import annotations
@@ -32,7 +33,6 @@ def run_pipeline(spark: SparkSession, pages_df: DataFrame, out_dir: str,
                  mode: str = "exact", bmp_filter: bool = False,
                  resume: bool = True) -> dict:
     """Run pages->bronze->silver->gold. Returns timing + counts summary."""
-    os.makedirs(out_dir, exist_ok=True)
     t0 = time.time()
     timings: dict[str, float] = {}
 

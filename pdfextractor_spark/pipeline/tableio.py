@@ -1,24 +1,23 @@
-"""Table-format dispatch for checkpointed stage writes (Iceberg or parquet).
+"""Where a checkpointed stage lives: an Iceberg table or a parquet directory.
 
 The north-rule target is an Iceberg lakehouse: every medallion stage commits
 an atomic table snapshot so a resumed job sees either the whole stage or none
-of it, and concurrent readers never observe a half-written directory. This
-sandbox ships no Iceberg runtime jar, so the dispatch is configuration-driven:
+of it, and concurrent readers never observe a half-written directory. One
+rule, decided from the session alone, places every checkpoint path:
 
-* When an Iceberg catalog is configured on the session
-  (``spark.sql.catalog.<name> = org.apache.iceberg.spark.SparkCatalog`` —
-  detected from the session conf, or forced via
-  ``SPARK_GRAFT_ICEBERG_CATALOG``), stage writes go through the
+* When the session has an Iceberg catalog (``spark.sql.catalog.<name> =
+  org.apache.iceberg.spark.SparkCatalog`` in its conf, or the catalog named
+  by ``SPARK_GRAFT_ICEBERG_CATALOG``), the path is the table
+  :func:`table_identifier` names. Stage writes go through the
   DataFrameWriterV2 snapshot path: ``df.writeTo(cat.ns.table)
-  .using("iceberg").createOrReplace()`` for a fresh stage and
-  ``.append()`` for a resume delta. Reads come back via ``spark.table``.
-* Otherwise the same layout lands in parquet directories (atomicity
-  degraded to the _SUCCESS-marker protocol), which is what every test in
-  this repo exercises.
+  .using("iceberg").createOrReplace()`` for a fresh stage and ``.append()``
+  for a resume delta; reads come back via ``spark.table``.
+* Otherwise the path is a parquet directory (atomicity degraded to the
+  _SUCCESS-marker protocol), probed and dropped through the path's Hadoop
+  ``FileSystem``, so a ``file://`` or object-store URI works like a local
+  path. This is what every test in this repo exercises.
 
-Checkpoint references returned by :func:`write_checkpoint` are ``(kind,
-target)`` pairs so callers never re-derive the storage location; pass them
-to :func:`read_checkpoint`.
+Every function here takes the stage path; none hands out a storage handle.
 
 Ref semantics: the reference persists per-chunk JSON state files
 (backend/scripts/chunked_mdeq_extraction.js:107-166); an Iceberg snapshot
@@ -31,83 +30,50 @@ from __future__ import annotations
 import hashlib
 import os
 import re
-import shutil
-import warnings
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
     "iceberg_catalog",
     "table_identifier",
-    "checkpoint_format",
     "write_checkpoint",
     "read_checkpoint",
-    "checkpoint_ref",
     "checkpoint_exists",
     "drop_checkpoint",
 ]
 
 _NAMESPACE = "graft"
 _SANITIZE = re.compile(r"[^A-Za-z0-9_]+")
-_WARNED_NO_CATALOG = False
+_CATALOG_PREFIX = "spark.sql.catalog."
 
-
-def checkpoint_format() -> str:
-    """Requested stage-checkpoint format: ``parquet`` (default) or ``iceberg``."""
-    return os.environ.get("SPARK_GRAFT_TABLE_FORMAT", "parquet").strip().lower()
-
-
-# catalog detection runs a SET scan; one pipeline run writes ~8 checkpoints,
-# so cache the result per live session. Weak keys: the entry dies with the
-# session object, so a recycled id can never serve a stale answer.
-_CATALOG_CACHE: "weakref.WeakKeyDictionary[SparkSession, str | None]" = None  # set below
-import weakref  # noqa: E402  (kept next to its single consumer)
-
-_CATALOG_CACHE = weakref.WeakKeyDictionary()
+# one pipeline run resolves ~8 checkpoints, so the conf scan is cached per
+# live session. Weak keys: the entry dies with the session object, so a
+# recycled id can never serve a stale answer.
+_CATALOG_CACHE: weakref.WeakKeyDictionary[SparkSession, str | None] = \
+    weakref.WeakKeyDictionary()
 
 
 def iceberg_catalog(spark: SparkSession) -> str | None:
     """Name of a configured Iceberg catalog, or None.
 
     ``SPARK_GRAFT_ICEBERG_CATALOG`` wins when set; otherwise scan the session
-    conf (``SET`` covers both spark-submit --conf and runtime-set keys) for
-    ``spark.sql.catalog.<name>`` entries whose implementation class mentions
-    Iceberg. The scan result is cached per session object; runtime
-    ``spark.conf.set`` changes after the first call are deliberately not
-    re-detected mid-run (a half-switched pipeline would checkpoint stages in
-    two different backends).
+    conf (``spark.conf.getAll`` covers both spark-submit --conf and
+    runtime-set keys, and runs no Spark job) for ``spark.sql.catalog.<name>``
+    entries whose implementation class mentions Iceberg. The scan result is
+    cached per session object; runtime ``spark.conf.set`` changes after the
+    first call are deliberately not re-detected mid-run (a half-switched
+    pipeline would checkpoint stages in two different backends).
     """
     forced = os.environ.get("SPARK_GRAFT_ICEBERG_CATALOG")
     if forced:
         return forced.strip() or None
-    try:
-        if spark in _CATALOG_CACHE:
-            return _CATALOG_CACHE[spark]
-    except TypeError:  # unhashable/unweakrefable session stand-in: skip cache
-        spark_key = None
-    else:
-        spark_key = spark
-    found: str | None = None
-    try:
-        rows = spark.sql("SET").collect()
-    except Exception:  # pragma: no cover - SET is always available on 3.x/4.x
-        rows = []
-    for row in rows:
-        conf_key = row["key"]
-        if not conf_key.startswith("spark.sql.catalog."):
-            continue
-        tail = conf_key[len("spark.sql.catalog."):]
-        if "." in tail:  # per-catalog option (…<name>.type etc.), not the impl
-            continue
-        if "iceberg" in (row["value"] or "").lower():
-            found = tail
-            break
-    if spark_key is not None:
-        try:
-            _CATALOG_CACHE[spark_key] = found
-        except TypeError:
-            pass
-    return found
+    if spark not in _CATALOG_CACHE:
+        names = (key[len(_CATALOG_PREFIX):] for key, impl in sorted(spark.conf.getAll.items())
+                 if key.startswith(_CATALOG_PREFIX) and "iceberg" in impl.lower())
+        # a per-catalog option (…<name>.type etc.) is not the impl
+        _CATALOG_CACHE[spark] = next((name for name in names if "." not in name), None)
+    return _CATALOG_CACHE[spark]
 
 
 def table_identifier(catalog: str, path: str) -> str:
@@ -124,88 +90,76 @@ def table_identifier(catalog: str, path: str) -> str:
     return f"{catalog}.{_NAMESPACE}.{name[:96]}_{digest}"
 
 
-def write_checkpoint(df: DataFrame, path: str, mode: str = "overwrite",
-                     fmt: str | None = None) -> tuple[str, str]:
-    """Write one stage checkpoint; returns a ``(kind, target)`` reference.
+def _table(spark: SparkSession, path: str) -> str | None:
+    """The Iceberg table holding the checkpoint at ``path``, or None when it
+    is a parquet directory."""
+    cat = iceberg_catalog(spark)
+    return None if cat is None else table_identifier(cat, path)
 
-    ``kind`` is ``"table"`` (Iceberg snapshot commit) or ``"path"`` (parquet
-    directory). ``mode`` is ``overwrite`` (fresh stage) or ``append``
-    (resume delta; on Iceberg this is a second snapshot on the same table,
-    so time travel across resume boundaries comes for free).
+
+def _fs(spark: SparkSession, path: str):
+    """The Hadoop ``FileSystem`` serving ``path``, and the path as a Hadoop
+    ``Path``."""
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(sc._jsc.hadoopConfiguration()), hpath
+
+
+def write_checkpoint(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """Write the stage checkpoint at ``path``.
+
+    ``mode`` is ``overwrite`` (fresh stage) or ``append`` (resume delta; on
+    Iceberg this is a second snapshot on the same table, so time travel
+    across resume boundaries comes for free).
     """
-    fmt = (fmt or checkpoint_format())
-    if fmt == "iceberg":
-        cat = iceberg_catalog(df.sparkSession)
-        if cat is None:
-            # one warning per process, not one per checkpoint: a pipeline
-            # run writes ~8 checkpoints and the message is identical
-            global _WARNED_NO_CATALOG
-            if not _WARNED_NO_CATALOG:
-                _WARNED_NO_CATALOG = True
-                warnings.warn(
-                    "SPARK_GRAFT_TABLE_FORMAT=iceberg but no Iceberg catalog is "
-                    f"configured on the session; writing parquet at {path} instead",
-                    stacklevel=2,
-                )
+    spark = df.sparkSession
+    tbl = _table(spark, path)
+    if tbl is None:
+        df.write.mode(mode).parquet(path)
+        return
+    try:  # namespaces are cheap to ensure and required by createOrReplace
+        spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {tbl.rsplit('.', 1)[0]}")
+    except Exception:
+        pass
+    writer = df.writeTo(tbl).using("iceberg")
+    if mode == "append":
+        # create-if-absent decided by an explicit existence probe: catching
+        # the append error instead would turn ANY append failure (schema
+        # drift, snapshot conflict) into a createOrReplace that silently
+        # discards the prior checkpoint and keeps only the delta
+        if spark.catalog.tableExists(tbl):
+            writer.append()
         else:
-            tbl = table_identifier(cat, path)
-            try:  # namespaces are cheap to ensure and required by createOrReplace
-                df.sparkSession.sql(f"CREATE NAMESPACE IF NOT EXISTS {cat}.{_NAMESPACE}")
-            except Exception:
-                pass
-            writer = df.writeTo(tbl).using("iceberg")
-            if mode == "append":
-                # create-if-absent decided by an explicit existence probe:
-                # catching the append error instead would turn ANY append
-                # failure (schema drift, snapshot conflict) into a
-                # createOrReplace that silently discards the prior
-                # checkpoint and keeps only the delta
-                if df.sparkSession.catalog.tableExists(tbl):
-                    writer.append()
-                else:
-                    writer.create()
-            else:
-                writer.createOrReplace()
-            return ("table", tbl)
-    elif fmt != "parquet":
-        raise ValueError(f"unknown checkpoint format {fmt!r} (parquet|iceberg)")
-    df.write.mode(mode).parquet(path)
-    return ("path", path)
-
-
-def read_checkpoint(spark: SparkSession, ref: tuple[str, str]) -> DataFrame:
-    """Load a checkpoint written by :func:`write_checkpoint`."""
-    kind, target = ref
-    if kind == "table":
-        return spark.table(target)
-    return spark.read.parquet(target)
-
-
-def checkpoint_ref(spark: SparkSession, path: str) -> tuple[str, str]:
-    """Where the checkpoint for ``path`` lives under the active format, as
-    the ``(kind, target)`` reference :func:`write_checkpoint` returns."""
-    if checkpoint_format() == "iceberg":
-        cat = iceberg_catalog(spark)
-        if cat is not None:
-            return ("table", table_identifier(cat, path))
-    return ("path", path)
-
-
-def checkpoint_exists(spark: SparkSession, ref: tuple[str, str]) -> bool:
-    """Whether a complete checkpoint exists at ``ref``."""
-    kind, target = ref
-    if kind == "table":
-        return spark.catalog.tableExists(target)
-    # a local-filesystem probe; a cluster object store needs the Hadoop FS API
-    return os.path.exists(target) and (os.path.exists(os.path.join(target, "_SUCCESS")) or any(
-        f.endswith(".parquet") for f in os.listdir(target)
-    ))
-
-
-def drop_checkpoint(spark: SparkSession, ref: tuple[str, str]) -> None:
-    """Remove the checkpoint at ``ref``; a missing one is not an error."""
-    kind, target = ref
-    if kind == "table":
-        spark.sql(f"DROP TABLE IF EXISTS {target}")
+            writer.create()
     else:
-        shutil.rmtree(target, ignore_errors=True)
+        writer.createOrReplace()
+
+
+def read_checkpoint(spark: SparkSession, path: str) -> DataFrame:
+    """Load the checkpoint :func:`write_checkpoint` wrote at ``path``."""
+    tbl = _table(spark, path)
+    return spark.read.parquet(path) if tbl is None else spark.table(tbl)
+
+
+def checkpoint_exists(spark: SparkSession, path: str) -> bool:
+    """Whether a complete checkpoint exists at ``path``: a ``_SUCCESS``
+    marker or a top-level ``*.parquet`` file counts for a directory."""
+    tbl = _table(spark, path)
+    if tbl is not None:
+        return spark.catalog.tableExists(tbl)
+    fs, hpath = _fs(spark, path)
+    if not fs.exists(hpath):
+        return False
+    if fs.exists(hpath.suffix("/_SUCCESS")):
+        return True
+    return any(st.getPath().getName().endswith(".parquet") for st in fs.listStatus(hpath))
+
+
+def drop_checkpoint(spark: SparkSession, path: str) -> None:
+    """Remove the checkpoint at ``path``; a missing one is not an error."""
+    tbl = _table(spark, path)
+    if tbl is not None:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    else:
+        fs, hpath = _fs(spark, path)
+        fs.delete(hpath, True)

@@ -36,7 +36,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 
 from .lineage import config_fingerprint, write_stage
-from .tableio import checkpoint_ref, read_checkpoint, write_checkpoint
+from .tableio import read_checkpoint, write_checkpoint
 from .webclean import _flag_stages, _perdoc_stages, _select_stages, prep_report
 
 __all__ = ["run_corpus_prep"]
@@ -73,7 +73,6 @@ def run_corpus_prep(
     extraction, selection stages run). Returns a summary dict with per-
     stage timings, row counts, resume bookkeeping, and the prep_report
     accounting row."""
-    os.makedirs(out_dir, exist_ok=True)
     summary: dict = {}
     t0 = time.time()
 
@@ -128,7 +127,7 @@ def run_corpus_prep(
     summary["corpus_recomputed"] = corpus.action == "rebuilt"
     summary["corpus_rows"] = corpus.rows
     summary["corpus_sec"] = round(time.time() - t2, 3)
-    report = read_checkpoint(spark, checkpoint_ref(spark, report_path)).collect()[0].asDict()
+    report = read_checkpoint(spark, report_path).collect()[0].asDict()
     summary["prep_report"] = {k: (int(v) if v is not None else 0)
                               for k, v in report.items()}
     summary["total_sec"] = round(time.time() - t0, 3)

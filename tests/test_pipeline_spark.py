@@ -91,13 +91,27 @@ def test_write_stage_runs_no_job_past_the_lineage_write(spark, tmp_path):
             sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    plain = jobs(f"plain-{tmp_path.name}", lambda: tableio.read_checkpoint(
-        spark, tableio.write_checkpoint(df, str(tmp_path / "plain"))))
+    def plain_write():
+        tableio.write_checkpoint(df, str(tmp_path / "plain"))
+        tableio.read_checkpoint(spark, str(tmp_path / "plain"))
+
+    plain = jobs(f"plain-{tmp_path.name}", plain_write)
     staged = jobs(f"stage-{tmp_path.name}",
                   lambda: write_stage(df, str(tmp_path / "stage"), "s", lambda d: d,
                                       key="url"))
     assert plain >= 1
     assert staged <= plain + 1, (staged, plain)
+
+
+def test_write_stage_resumes_a_uri_path(spark, tmp_path):
+    """A checkpoint addressed by a ``file://`` URI is found again: the
+    storage probe goes through the path's Hadoop FileSystem."""
+    df = spark.createDataFrame([(f"u{i}", "x" * i, None) for i in range(40)],
+                               "url string, raw_text string, error string")
+    path = "file://" + str(tmp_path / "uri" / "stage")
+    assert write_stage(df, path, "s", lambda d: d, key="url").action == "rebuilt"
+    again = write_stage(df, path, "s", lambda d: d, key="url")
+    assert (again.action, again.rows) == ("kept", 40)
 
 
 def test_resume_anti_join(spark, pages, bronze):

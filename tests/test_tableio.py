@@ -1,9 +1,8 @@
-"""Table-format dispatch for stage checkpoints (Iceberg vs parquet).
+"""Checkpoint storage for stage paths (Iceberg table vs parquet directory).
 
-The sandbox has no Iceberg runtime jar, so these tests pin (1) catalog
-detection from session conf, (2) the graceful parquet fallback when the
-iceberg format is requested without a catalog, and (3) that the medallion
-runner stays green end-to-end under that fallback.
+Without an Iceberg runtime jar on the classpath these tests pin (1) catalog
+detection from session conf, (2) the stable table identifier of a path,
+and (3) that a configured catalog alone routes a checkpoint to Iceberg.
 """
 
 from __future__ import annotations
@@ -13,19 +12,11 @@ import os
 import pytest
 
 from pdfextractor_spark.pipeline.tableio import (
-    checkpoint_format,
     iceberg_catalog,
     read_checkpoint,
     table_identifier,
     write_checkpoint,
 )
-
-
-def test_checkpoint_format_default_and_env(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_TABLE_FORMAT", raising=False)
-    assert checkpoint_format() == "parquet"
-    monkeypatch.setenv("SPARK_GRAFT_TABLE_FORMAT", "  Iceberg ")
-    assert checkpoint_format() == "iceberg"
 
 
 def test_iceberg_catalog_detected_from_conf(spark, monkeypatch):
@@ -64,49 +55,23 @@ def test_table_identifier_is_sanitized_and_collision_free():
     assert table_identifier("cat", "///").startswith("cat.graft.stage_")
 
 
-def test_unknown_format_rejected(spark, tmp_path):
-    df = spark.range(3)
-    with pytest.raises(ValueError, match="unknown checkpoint format"):
-        write_checkpoint(df, str(tmp_path / "x"), fmt="orc")
-
-
-def test_iceberg_without_catalog_falls_back_to_parquet(spark, tmp_path, monkeypatch):
+def test_configured_catalog_routes_checkpoints_to_iceberg(spark, tmp_path, monkeypatch):
+    """An Iceberg catalog on the session is the whole rule: with no runtime
+    jar here the write must fail on the catalog, not land as parquet."""
     from pdfextractor_spark.pipeline import tableio
 
     monkeypatch.delenv("SPARK_GRAFT_ICEBERG_CATALOG", raising=False)
+    path = str(tmp_path / "stage")
+    spark.conf.set("spark.sql.catalog.icecat", "org.apache.iceberg.spark.SparkCatalog")
     tableio._CATALOG_CACHE.clear()
-    monkeypatch.setattr(tableio, "_WARNED_NO_CATALOG", False)
-    df = spark.range(5).withColumnRenamed("id", "v")
-    target = str(tmp_path / "stage")
-    with pytest.warns(UserWarning, match="no Iceberg catalog"):
-        ref = write_checkpoint(df, target, fmt="iceberg")
-    # the identical warning is not repeated for subsequent checkpoints
-    import warnings as _w
-
-    with _w.catch_warnings(record=True) as caught:
-        _w.simplefilter("always")
-        write_checkpoint(df, str(tmp_path / "stage2"), fmt="iceberg")
-    assert not [w for w in caught if "no Iceberg catalog" in str(w.message)]
-    assert ref == ("path", target)
-    assert read_checkpoint(spark, ref).count() == 5
-
-
-def test_runner_green_under_iceberg_fallback(spark, tmp_path, monkeypatch):
-    from pdfextractor_spark.corpus import generate_pages
-    from pdfextractor_spark.pipeline.runner import run_pipeline
-    from pdfextractor_spark.pipeline.schema import PAGES_SCHEMA
-
-    monkeypatch.setenv("SPARK_GRAFT_TABLE_FORMAT", "iceberg")
-    monkeypatch.delenv("SPARK_GRAFT_ICEBERG_CATALOG", raising=False)
-    pages = spark.createDataFrame(generate_pages(40), schema=PAGES_SCHEMA)
-    out = str(tmp_path / "run")
-    summary = run_pipeline(spark, pages, out)
-    assert summary["docs"] == 40
-    assert summary["byte_identical_matched"] == summary["byte_identical_total"]
-    assert os.path.exists(os.path.join(out, "bronze"))
-    # resume path under the same fallback: nothing left to do, still green
-    summary2 = run_pipeline(spark, pages, out)
-    assert summary2["docs"] == 40
+    try:
+        with pytest.raises(Exception,
+                           match="Cannot find catalog plugin class for catalog 'icecat'"):
+            write_checkpoint(spark.range(5), path)
+    finally:
+        spark.conf.unset("spark.sql.catalog.icecat")
+        tableio._CATALOG_CACHE.clear()
+    assert not os.path.exists(path)
 
 
 ICEBERG_JAR_AVAILABLE = any(
@@ -119,8 +84,8 @@ ICEBERG_JAR_AVAILABLE = any(
 
 @pytest.mark.skipif(
     not ICEBERG_JAR_AVAILABLE,
-    reason="no iceberg-spark-runtime jar resolvable offline in this container; "
-    "the parquet-fallback contract above is the tested behavior here. On a "
+    reason="no iceberg-spark-runtime jar on the pyspark classpath; the "
+    "catalog routing above is the tested behavior here. On a "
     "cluster with the jar on the classpath this test pins the REAL catalog "
     "path: hadoop-catalog snapshot commit + time-travel read of a checkpoint.",
 )
@@ -147,15 +112,16 @@ def test_iceberg_hadoop_catalog_roundtrip(tmp_path):
         tableio._CATALOG_CACHE.clear()
         df = spark.range(5).withColumnRenamed("id", "doc_id")
         path = str(tmp_path / "run" / "bronze")
-        ref = write_checkpoint(df, path, fmt="iceberg")
-        assert ref[0] == "table"  # catalog detected -> snapshot commit, not parquet
-        assert read_checkpoint(spark, ref).count() == 5
+        write_checkpoint(df, path)
+        # catalog detected -> snapshot commit, not parquet
+        assert not os.path.exists(path)
+        assert read_checkpoint(spark, path).count() == 5
         ident = table_identifier("icecat", path)
         snaps = spark.sql(f"SELECT snapshot_id FROM {ident}.snapshots").collect()
         assert len(snaps) >= 1
-        write_checkpoint(df, path, mode="append", fmt="iceberg")
+        write_checkpoint(df, path, mode="append")
         v0 = spark.read.option("snapshot-id", snaps[0][0]).table(ident)
         assert v0.count() == 5  # time-travel still sees the first snapshot
-        assert read_checkpoint(spark, ref).count() == 10
+        assert read_checkpoint(spark, path).count() == 10
     finally:
         spark.stop()
