@@ -487,75 +487,66 @@ def q_streaming_extract_smoke(spark, sf_dir):
 
 _ORACLE_MAT_DIR = "/tmp/spark_graft_oracle"
 
-# paths materialized in THIS process — the 150-doc extraction corpus behind
-# the gold aggregations is deterministic, so four queries sharing it only
-# need one build per session (the driver harness calls each query in turn)
-_MAT_BUILT: set[str] = set()
+# set once the 150-doc gold corpus is written in THIS process: its
+# extraction is deterministic, so the four gold queries sharing it need
+# one build per session (the driver harness calls each query in turn)
+_GOLD_BUILT = False
 
 
-def _materialized_cost_tables(spark):
-    """Silver cost tables exploded flat and written to parquet ONCE so the
-    A4/A5 gold aggregations run on the same bytes in Spark AND DuckDB —
-    extraction itself is golden-fixture-verified; this puts the aggregation
-    math under the oracle. explode_outer keeps table-less reports (one
-    null-pattern row) so report_count survives."""
-    from pdfextractor_spark.corpus import generate_pages
-    from pdfextractor_spark.pipeline.fused import extract_fused
-    from pdfextractor_spark.pipeline.schema import PAGES_SCHEMA
+def _gold_corpus(spark, name: str) -> DataFrame:
+    """One flat table of the 150-doc gold corpus, written to parquet so
+    Spark and the DuckDB oracles read the same bytes: ``gold_tables``
+    (``pipeline.gold.cost_table_rows``, the A4/A5 input) or ``bmps_flat``
+    (the exploded ``(name, category, confidence)`` BMPs, the W3 input).
+    Extraction itself is golden-fixture-verified; this puts the gold math
+    under the oracle. The first call extracts once and writes both."""
+    global _GOLD_BUILT
+    if not _GOLD_BUILT:
+        from pdfextractor_spark.corpus import generate_pages
+        from pdfextractor_spark.pipeline.fused import extract_fused
+        from pdfextractor_spark.pipeline.gold import cost_table_rows
+        from pdfextractor_spark.pipeline.schema import PAGES_SCHEMA
 
-    path = f"{_ORACLE_MAT_DIR}/gold_tables.parquet"
-    if path not in _MAT_BUILT:
         pages = spark.createDataFrame(generate_pages(150), schema=PAGES_SCHEMA)
-        silver = extract_fused(pages, num_partitions=8)
-        flat = silver.select("url", F.explode_outer("cost_tables").alias("t")).select(
-            "url",
-            F.col("t.pattern_id").alias("pattern_id"),
-            F.col("t.pattern_confidence").alias("conf"),
-            F.col("t.total_reported").alias("r"),
-            F.col("t.total_computed").alias("c"),
-        )
-        flat.write.mode("overwrite").parquet(path)
-        _MAT_BUILT.add(path)
-    return spark.read.parquet(path)
+        silver = extract_fused(pages, num_partitions=8).cache()
+        cost_table_rows(silver).write.mode("overwrite").parquet(
+            f"{_ORACLE_MAT_DIR}/gold_tables.parquet")
+        silver.select(F.explode("bmps").alias("b")).select(
+            F.col("b.name").alias("name"), F.col("b.category").alias("category"),
+            F.col("b.confidence").alias("confidence"),
+        ).write.mode("overwrite").parquet(f"{_ORACLE_MAT_DIR}/bmps_flat.parquet")
+        silver.unpersist()
+        _GOLD_BUILT = True
+    return spark.read.parquet(f"{_ORACLE_MAT_DIR}/{name}.parquet")
+
+
+def _round4(*cols: str) -> list:
+    return [F.round(c, 4).alias(c) for c in cols]
 
 
 def q_gold_cost_summary(spark, sf_dir):
-    """A4 flagship gold rollup (ref: backend/routes/reportSummary.js:21-108)
-    computed from the materialized flat cost-table parquet; the DuckDB
-    oracle aggregates the same parquet."""
-    flat = _materialized_cost_tables(spark)
-    per_report = flat.groupBy("url").agg(
-        F.sum(F.when(F.col("r") > 0, F.col("r")).otherwise(0.0)).alias("tr"),
-        F.sum(F.when(F.col("c") > 0, F.col("c")).otherwise(0.0)).alias("tc"),
-    )
-    totals = per_report.agg(
-        F.count(F.lit(1)).cast("long").alias("report_count"),
-        F.sum(F.when((F.col("tr") > 0) | (F.col("tc") > 0), 1).otherwise(0)).cast("long").alias("reports_with_costs"),
-        F.round(F.sum("tr"), 4).alias("total_reported"),
-        F.round(F.sum("tc"), 4).alias("total_computed"),
-    )
-    weighted = flat.agg(
-        F.round(F.sum(F.when((F.col("c") > 0) & (F.col("conf") > 0),
-                             F.col("c") * F.least(F.col("conf"), F.lit(1.0))).otherwise(0.0)), 4)
-        .alias("total_computed_weighted"))
-    return totals.crossJoin(weighted)
+    """A4 flagship gold rollup (ref: backend/routes/reportSummary.js:21-108):
+    ``pipeline.gold.gold_cost_summary`` over the materialized flat
+    cost-table parquet, rounded; the DuckDB oracle aggregates the same
+    parquet."""
+    from pdfextractor_spark.pipeline.gold import gold_cost_summary
+
+    return gold_cost_summary(_gold_corpus(spark, "gold_tables")).select(
+        "report_count", "reports_with_costs",
+        *_round4("total_reported", "total_computed", "total_computed_weighted"))
 
 
 def q_gold_report_costs(spark, sf_dir):
-    """A5 per-report cost rollup (ref: backend/routes/list.js:38-73) from
-    the materialized flat cost-table parquet; DuckDB oracle runs the same
-    SQL over it. Reports without tables contribute one null-pattern row
-    (tables counts mirror the reference, which counts the report's table
-    list length)."""
-    flat = _materialized_cost_tables(spark)
+    """A5 per-report cost rollup (ref: backend/routes/list.js:38-73):
+    ``pipeline.gold.gold_report_costs`` over the materialized flat
+    cost-table parquet, rounded, discrepancy of the rounded totals; the
+    DuckDB oracle runs the same SQL over it."""
+    from pdfextractor_spark.pipeline.gold import gold_report_costs
+
     return (
-        flat.groupBy("url")
-        .agg(
-            F.sum(F.when(F.col("pattern_id").isNotNull(), 1).otherwise(0)).cast("long").alias("tables"),
-            F.round(F.sum(F.when(F.col("r") > 0, F.col("r")).otherwise(0.0)), 4).alias("total_reported"),
-            F.round(F.sum(F.when(F.col("c") > 0, F.col("c")).otherwise(0.0)), 4).alias("total_computed"),
-            F.sum(F.when((F.col("r") > 0) | (F.col("c") > 0), 1).otherwise(0)).cast("long").alias("tables_with_costs"),
-        )
+        gold_report_costs(_gold_corpus(spark, "gold_tables"))
+        .select("url", "tables", *_round4("total_reported", "total_computed"),
+                "tables_with_costs")
         .withColumn("discrepancy", F.round(F.col("total_reported") - F.col("total_computed"), 4))
         .orderBy("url")
     )
@@ -567,22 +558,9 @@ def q_gold_bmp_dedupe(spark, sf_dir):
     materialized to parquet; BOTH engines canonicalize (lowercase, collapse
     whitespace, strip trailing punctuation, (feet)->(ft), naive
     de-pluralize) and keep the max-confidence row per canonical name."""
-    from pdfextractor_spark.corpus import generate_pages
-    from pdfextractor_spark.pipeline.fused import extract_fused
     from pdfextractor_spark.pipeline.gold import gold_bmp_dedupe
-    from pdfextractor_spark.pipeline.schema import PAGES_SCHEMA
 
-    path = f"{_ORACLE_MAT_DIR}/bmps_flat.parquet"
-    if path not in _MAT_BUILT:
-        pages = spark.createDataFrame(generate_pages(150), schema=PAGES_SCHEMA)
-        silver = extract_fused(pages, num_partitions=8)
-        bmps = silver.select(F.explode("bmps").alias("b")).select(
-            F.col("b.name").alias("name"), F.col("b.category").alias("category"),
-            F.col("b.confidence").alias("confidence"),
-        )
-        bmps.write.mode("overwrite").parquet(path)
-        _MAT_BUILT.add(path)
-    return (gold_bmp_dedupe(spark.read.parquet(path))
+    return (gold_bmp_dedupe(_gold_corpus(spark, "bmps_flat"))
             .withColumn("confidence", F.round("confidence", 6))
             .orderBy("canon"))
 
@@ -644,33 +622,19 @@ def q_extract_reports(spark, sf_dir):
 
 
 def q_extract_pattern_usage(spark, sf_dir):
-    """Per-patternId cost-table rollup (A4 per-pattern block) from the
-    materialized flat parquet; DuckDB oracle runs the same SQL over it."""
-    flat = _materialized_cost_tables(spark).where(F.col("pattern_id").isNotNull())
-    r_pos = F.col("r").isNotNull() & (F.col("r") > 0)
-    c_pos = F.col("c").isNotNull() & (F.col("c") > 0)
-    both = r_pos & c_pos
-    rel = F.abs(F.col("r") - F.col("c")) / F.col("c")
+    """Per-patternId cost-table rollup (A4 per-pattern block):
+    ``pipeline.gold.gold_pattern_usage`` over the materialized flat
+    parquet, rounded, a pattern with no both-totals table averaging 0;
+    the DuckDB oracle runs the same SQL over it."""
+    from pdfextractor_spark.pipeline.gold import gold_pattern_usage
+
     return (
-        flat.groupBy("pattern_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("cnt"),
-            F.round(F.sum(F.when(r_pos, F.col("r")).otherwise(0.0)), 4).alias("total_reported"),
-            F.round(F.sum(F.when(c_pos, F.col("c")).otherwise(0.0)), 4).alias("total_computed"),
-            F.round(F.sum(
-                F.when(c_pos & F.col("conf").isNotNull() & (F.col("conf") > 0),
-                       F.col("c") * F.least(F.col("conf"), F.lit(1.0))).otherwise(0.0)
-            ), 4).alias("weighted_computed"),
-            F.sum(F.when(r_pos, 1).otherwise(0)).cast("long").alias("with_reported_totals"),
-            F.sum(F.when(both, 1).otherwise(0)).cast("long").alias("total_with_both"),
-            F.sum(F.when(both & (rel <= 0.01), 1).otherwise(0)).cast("long").alias("within_1pct"),
-            F.sum(F.when(both & (rel <= 0.05), 1).otherwise(0)).cast("long").alias("within_5pct"),
-            F.round(F.sum(F.when(both, F.col("r") - F.col("c")).otherwise(0.0)), 4).alias("sum_discrepancy"),
-        )
-        .withColumn("avg_discrepancy",
-                    F.round(F.when(F.col("total_with_both") > 0,
-                                   F.col("sum_discrepancy") / F.col("total_with_both"))
-                            .otherwise(F.lit(0.0)), 4))
+        gold_pattern_usage(_gold_corpus(spark, "gold_tables"))
+        .select("pattern_id", "cnt",
+                *_round4("total_reported", "total_computed", "weighted_computed"),
+                "with_reported_totals", "total_with_both", "within_1pct", "within_5pct",
+                *_round4("sum_discrepancy"),
+                F.round(F.coalesce("avg_discrepancy", F.lit(0.0)), 4).alias("avg_discrepancy"))
         .orderBy("pattern_id")
     )
 
@@ -2391,7 +2355,7 @@ def _live_oracle_sql() -> dict[str, str]:
             WITH flat AS (
               SELECT * FROM read_parquet('{_ORACLE_MAT_DIR}/gold_tables.parquet/*.parquet'))
             SELECT url,
-                   CAST(sum(CASE WHEN pattern_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS tables,
+                   CAST(count(table_id) AS BIGINT) AS tables,
                    round(sum(CASE WHEN r > 0 THEN r ELSE 0 END), 4) AS total_reported,
                    round(sum(CASE WHEN c > 0 THEN c ELSE 0 END), 4) AS total_computed,
                    CAST(sum(CASE WHEN r > 0 OR c > 0 THEN 1 ELSE 0 END) AS BIGINT) AS tables_with_costs,

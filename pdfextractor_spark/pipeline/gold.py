@@ -5,14 +5,19 @@ A4 cross-report cost summary (ref: backend/routes/reportSummary.js:21-108),
 A5 per-report rollup (backend/routes/list.js:38-73),
 A6 coverage audit (backend/scripts/audit_mdeq_cost_coverage.js),
 W3 cross-corpus BMP dedupe (backend/scripts/dedupe_bmps.js).
+
+A4 and A5 are computed here and nowhere else: ``run_pipeline`` and the
+driver queries both pass ``cost_table_rows(silver)`` (or that frame
+written to parquet) to the three cost rollups.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
+    "cost_table_rows",
     "gold_pattern_usage",
     "gold_cost_summary",
     "gold_report_costs",
@@ -30,11 +35,16 @@ __all__ = [
 ]
 
 
-def _exploded_tables(silver: DataFrame) -> DataFrame:
+def cost_table_rows(silver: DataFrame) -> DataFrame:
+    """One row per silver cost table: ``(url, table_id, pattern_id, conf,
+    r, c)``, the flat frame every A4/A5 rollup reads. ``explode_outer``
+    keeps a report with no tables as one all-null row, so the per-report
+    rollup still sees it (zero tables, zero totals)."""
     return (
-        silver.select("url", F.explode("cost_tables").alias("t"))
+        silver.select("url", F.explode_outer("cost_tables").alias("t"))
         .select(
             "url",
+            F.col("t.id").alias("table_id"),
             F.col("t.pattern_id").alias("pattern_id"),
             F.col("t.pattern_confidence").alias("conf"),
             F.col("t.total_reported").alias("r"),
@@ -43,25 +53,33 @@ def _exploded_tables(silver: DataFrame) -> DataFrame:
     )
 
 
-def gold_pattern_usage(silver: DataFrame) -> DataFrame:
-    """Per-patternId rollup: count, totals, confidence-weighted computed,
-    within-1%/5% discrepancy buckets, avg discrepancy. Sorted by
-    totalComputed desc (reportSummary.js:84-97)."""
-    t = _exploded_tables(silver).where(F.col("pattern_id").isNotNull())
+def _weighted() -> Column:
+    """A table's confidence-weighted computed total: ``c * min(conf, 1)``
+    when both are positive, else 0."""
+    c, conf = F.col("c"), F.col("conf")
+    return F.when((c > 0) & (conf > 0), c * F.least(conf, F.lit(1.0))).otherwise(0.0)
+
+
+def gold_pattern_usage(rows: DataFrame) -> DataFrame:
+    """Per-patternId rollup over ``cost_table_rows``: count, totals,
+    confidence-weighted computed, within-1%/5% discrepancy buckets, avg
+    discrepancy (null when no table has both totals). Tables without a
+    pattern id are left out. Sorted by totalComputed desc
+    (reportSummary.js:84-97)."""
+    t = rows.where(F.col("pattern_id").isNotNull())
     r_pos = F.col("r").isNotNull() & (F.col("r") > 0)
     c_pos = F.col("c").isNotNull() & (F.col("c") > 0)
     both = r_pos & c_pos
-    rel = F.abs(F.col("r") - F.col("c")) / F.col("c")
+    # try_divide: common-subexpression elimination evaluates ``rel`` ahead
+    # of the ``both`` guard, and an ANSI divide by c = 0 would fail the job
+    rel = F.try_divide(F.abs(F.col("r") - F.col("c")), F.col("c"))
     return (
         t.groupBy("pattern_id")
         .agg(
             F.count(F.lit(1)).alias("cnt"),
             F.sum(F.when(r_pos, F.col("r")).otherwise(0.0)).alias("total_reported"),
             F.sum(F.when(c_pos, F.col("c")).otherwise(0.0)).alias("total_computed"),
-            F.sum(
-                F.when(c_pos & F.col("conf").isNotNull() & (F.col("conf") > 0),
-                       F.col("c") * F.least(F.col("conf"), F.lit(1.0))).otherwise(0.0)
-            ).alias("weighted_computed"),
+            F.sum(_weighted()).alias("weighted_computed"),
             F.sum(F.when(r_pos, 1).otherwise(0)).alias("with_reported_totals"),
             F.sum(F.when(both, 1).otherwise(0)).alias("total_with_both"),
             F.sum(F.when(both & (rel <= 0.01), 1).otherwise(0)).alias("within_1pct"),
@@ -78,38 +96,36 @@ def gold_pattern_usage(silver: DataFrame) -> DataFrame:
     )
 
 
-def gold_report_costs(silver: DataFrame) -> DataFrame:
-    """Per-report cost rollup (A5): Σreported/Σcomputed over positive table
-    totals, tables count, discrepancy."""
-    t = _exploded_tables(silver)
+def gold_report_costs(rows: DataFrame) -> DataFrame:
+    """Per-report cost rollup (A5) over ``cost_table_rows``: the report's
+    table count (every table, with or without a pattern id; the
+    reference counts the table list), Σreported/Σcomputed over positive
+    table totals, tables with any positive total, discrepancy, and the
+    confidence-weighted Σcomputed the A4 summary adds up."""
     return (
-        t.groupBy("url")
+        rows.groupBy("url")
         .agg(
-            F.count(F.lit(1)).alias("tables"),
+            F.count("table_id").alias("tables"),
             F.sum(F.when(F.col("r") > 0, F.col("r")).otherwise(0.0)).alias("total_reported"),
             F.sum(F.when(F.col("c") > 0, F.col("c")).otherwise(0.0)).alias("total_computed"),
             F.sum(F.when((F.col("r") > 0) | (F.col("c") > 0), 1).otherwise(0)).alias("tables_with_costs"),
+            F.sum(_weighted()).alias("total_computed_weighted"),
         )
         .withColumn("discrepancy", F.col("total_reported") - F.col("total_computed"))
     )
 
 
-def gold_cost_summary(silver: DataFrame) -> DataFrame:
-    """Corpus totals (A4 headline numbers): reportCount, reportsWithCosts,
-    Σreported, Σcomputed, confidence-weighted Σ."""
-    per_report = gold_report_costs(silver)
-    weighted = (
-        _exploded_tables(silver)
-        .agg(F.sum(F.when((F.col("c") > 0) & (F.col("conf") > 0),
-                          F.col("c") * F.least(F.col("conf"), F.lit(1.0))).otherwise(0.0)).alias("w"))
-    )
-    totals = per_report.agg(
+def gold_cost_summary(rows: DataFrame) -> DataFrame:
+    """Corpus totals (A4 headline numbers) over ``cost_table_rows``, one
+    aggregation of the per-report rollup: reportCount (distinct urls),
+    reportsWithCosts, Σreported, Σcomputed, confidence-weighted Σ."""
+    return gold_report_costs(rows).agg(
+        F.count(F.lit(1)).alias("report_count"),
         F.sum(F.when((F.col("total_reported") > 0) | (F.col("total_computed") > 0), 1).otherwise(0)).alias("reports_with_costs"),
         F.sum("total_reported").alias("total_reported"),
         F.sum("total_computed").alias("total_computed"),
+        F.sum("total_computed_weighted").alias("total_computed_weighted"),
     )
-    n = silver.agg(F.count(F.lit(1)).alias("report_count"))
-    return n.crossJoin(totals).crossJoin(weighted.withColumnRenamed("w", "total_computed_weighted"))
 
 
 def gold_coverage(silver: DataFrame) -> DataFrame:

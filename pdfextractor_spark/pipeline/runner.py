@@ -18,9 +18,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .bronze import extract_bronze
 from .gold import (
-    bronze_content_audit_summary, gold_cost_summary, gold_coverage,
-    gold_lang_rollup, gold_pattern_usage, reextract_candidates,
-    silver_anomaly_summary,
+    bronze_content_audit_summary, cost_table_rows, gold_cost_summary,
+    gold_coverage, gold_lang_rollup, gold_pattern_usage,
+    reextract_candidates, silver_anomaly_summary,
 )
 from .lineage import config_fingerprint, write_stage
 from .silver import extract_silver
@@ -50,10 +50,11 @@ def run_pipeline(spark: SparkSession, pages_df: DataFrame, out_dir: str,
     timings["silver_sec"] = time.time() - t1
 
     t2 = time.time()
+    tables = cost_table_rows(silver)
     gold = {
         "lang_rollup": gold_lang_rollup(silver),
-        "pattern_usage": gold_pattern_usage(silver),
-        "cost_summary": gold_cost_summary(silver),
+        "pattern_usage": gold_pattern_usage(tables),
+        "cost_summary": gold_cost_summary(tables),
         "coverage": gold_coverage(silver),
         # data-quality diagnostics (SURVEY §2.10b): the re-do list for the
         # next resume pass and the corpus anomaly/quality rollups

@@ -113,7 +113,7 @@ def test_no_cartesian_join_in_any_query(spark, sf_dir, qs):
         "ann_topk_cosine", "embedding_near_dups",
         # 1-row broadcast attaches (bound-flag / global-share columns)
         "extract_reports", "streaming_extract_smoke", "promo_revenue_share",
-        "nation_setops", "gold_cost_summary", "ann_lsh_topk", "ann_ivf_topk",
+        "nation_setops", "ann_lsh_topk", "ann_ivf_topk",
         "minhash_lsh_pairs", "simhash_near_dups", "ngram_jaccard_allpairs",
         "winnow_overlap", "sketch_cardinality", "sketch_quantiles",
         "lm_perplexity",  # 1-row broadcast of the LM's (total, vocab) consts
