@@ -7,13 +7,22 @@ and silver are keyed stages of ``lineage.write_stage``, each with a
 ``_lineage`` table next to it: an interrupted run appends only the urls a
 stage lacks (the J7 anti-join), and a silver built under another
 ``mode``/``bmp_filter`` is rebuilt, never appended to.
+
+Gold runs as one concurrent batch after silver: each of the seven gold
+tables is built and written on its own thread, next to the bronze
+``totals`` scan, so the driver's plan analysis and the small gold jobs
+overlap instead of running one after another. The threads carry the
+caller's job group, job description and tags.
 """
 
 from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any, Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from .bronze import extract_bronze
@@ -52,26 +61,32 @@ def run_pipeline(spark: SparkSession, pages_df: DataFrame, out_dir: str,
     t2 = time.time()
     tables = cost_table_rows(silver)
     gold = {
-        "lang_rollup": gold_lang_rollup(silver),
-        "pattern_usage": gold_pattern_usage(tables),
-        "cost_summary": gold_cost_summary(tables),
-        "coverage": gold_coverage(silver),
+        "lang_rollup": lambda: gold_lang_rollup(silver),
+        "pattern_usage": lambda: gold_pattern_usage(tables),
+        "cost_summary": lambda: gold_cost_summary(tables),
+        "coverage": lambda: gold_coverage(silver),
         # data-quality diagnostics (SURVEY §2.10b): the re-do list for the
         # next resume pass and the corpus anomaly/quality rollups
-        "reextract_candidates": reextract_candidates(bronze),
-        "content_audit": bronze_content_audit_summary(bronze),
-        "anomaly_summary": silver_anomaly_summary(silver),
+        "reextract_candidates": lambda: reextract_candidates(bronze),
+        "content_audit": lambda: bronze_content_audit_summary(bronze),
+        "anomaly_summary": lambda: silver_anomaly_summary(silver),
     }
-    for name, df in gold.items():
-        write_checkpoint(df, os.path.join(out_dir, f"gold_{name}"), mode="overwrite")
+
+    def write_gold(name: str, build: Callable[[], DataFrame]) -> Callable[[], None]:
+        return lambda: write_checkpoint(build(), os.path.join(out_dir, f"gold_{name}"),
+                                        mode="overwrite")
+
+    def bronze_totals():
+        return bronze.selectExpr(
+            "count(*) as n",
+            "sum(case when error is not null then 1 else 0 end) as e",
+            "sum(case when text_match then 1 else 0 end) as m",
+            "sum(case when text_match is not null then 1 else 0 end) as t",
+        ).first()
+
+    totals, *_ = _run_batch(spark, [bronze_totals, *(write_gold(n, b) for n, b in gold.items())])
     timings["gold_sec"] = time.time() - t2
 
-    totals = bronze.selectExpr(
-        "count(*) as n",
-        "sum(case when error is not null then 1 else 0 end) as e",
-        "sum(case when text_match then 1 else 0 end) as m",
-        "sum(case when text_match is not null then 1 else 0 end) as t",
-    ).first()
     timings["total_sec"] = time.time() - t0
     return {
         "docs": totals["n"],
@@ -80,3 +95,14 @@ def run_pipeline(spark: SparkSession, pages_df: DataFrame, out_dir: str,
         "byte_identical_total": int(totals["t"] or 0),
         **{k: round(v, 3) for k, v in timings.items()},
     }
+
+
+def _run_batch(spark: SparkSession, calls: list[Callable[[], Any]]) -> list[Any]:
+    """Run ``calls`` at once, one thread each, and return their results in
+    order. Each call is wrapped when it is submitted, so its jobs carry the
+    caller's job group, job description and tags. The first failing call's
+    error is raised only after every call has ended, and no thread outlives
+    the batch."""
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(call)) for call in calls]
+    return [f.result() for f in futures]

@@ -110,7 +110,7 @@ def test_dedup_spans_plan_shape(spark):
     # each Exchange node's Output column list from the formatted plan.
     import re
 
-    from pdfextractor_spark.plans.audit import explain_str
+    from tests.plan_audit import explain_str
 
     fmt = explain_str(out, "formatted")
     # node detail blocks: "(n) Exchange\nInput [k]: [col#1, ...]\n..."

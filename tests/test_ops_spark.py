@@ -523,7 +523,7 @@ def test_ivf_prebuilt_index_reused_and_df_centroid_path(spark, sf_dir):
 
 def test_char_lm_perplexity_discriminates_and_broadcasts(spark, sf_dir):
     from pdfextractor_spark.ops.lm import score_perplexity, train_char_lm
-    from pdfextractor_spark.plans.audit import join_strategies
+    from tests.plan_audit import join_strategies
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     model = train_char_lm(docs.where("doc_id % 2 = 0"))

@@ -123,14 +123,53 @@ def test_resume_anti_join(spark, pages, bronze):
     assert remaining.join(done, "url", "inner").count() == 0
 
 
+def _gold_rows(df):
+    """``df``'s rows in a fixed order: sorted on the non-float fields, so
+    float sums that differ in their last bits do not reorder them."""
+    return sorted((tuple(r) for r in df.collect()),
+                  key=lambda r: tuple(str(v) for v in r if not isinstance(v, float)))
+
+
 def test_runner_end_to_end_with_resume(spark, tmp_path):
+    from pdfextractor_spark.pipeline import gold
     from pdfextractor_spark.pipeline.runner import run_pipeline
 
+    sc = spark.sparkContext
     pages = spark.createDataFrame(generate_pages(40), schema=PAGES_SCHEMA)
     out = str(tmp_path / "stages")
-    res1 = run_pipeline(spark, pages, out)
+    group = f"runner-{tmp_path.name}"
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        res1 = run_pipeline(spark, pages, out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # every job of the run, the concurrent gold batch's included, ran
+    # under the caller's job group
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) <= ungrouped
+    assert sc.statusTracker().getJobIdsForGroup(group)
     assert res1["docs"] == 40
     assert res1["byte_identical_matched"] == res1["byte_identical_total"] > 0
+    # each gold table is its pipeline.gold function over the written stages
+    silver = tableio.read_checkpoint(spark, f"{out}/silver")
+    bronze = tableio.read_checkpoint(spark, f"{out}/bronze")
+    tables = gold.cost_table_rows(silver)
+    expected = {
+        "lang_rollup": gold.gold_lang_rollup(silver),
+        "pattern_usage": gold.gold_pattern_usage(tables),
+        "cost_summary": gold.gold_cost_summary(tables),
+        "coverage": gold.gold_coverage(silver),
+        "reextract_candidates": gold.reextract_candidates(bronze),
+        "content_audit": gold.bronze_content_audit_summary(bronze),
+        "anomaly_summary": gold.silver_anomaly_summary(silver),
+    }
+    for name, want in expected.items():
+        got = tableio.read_checkpoint(spark, f"{out}/gold_{name}")
+        assert got.columns == want.columns, name
+        got_rows, want_rows = _gold_rows(got), _gold_rows(want)
+        assert len(got_rows) == len(want_rows), name
+        for g, w in zip(got_rows, want_rows):
+            assert g == pytest.approx(w, rel=1e-9, abs=1e-9), name
     # rerun over the same output dir: resume is idempotent, no duplicates
     res2 = run_pipeline(spark, pages, out)
     assert res2["docs"] == 40
@@ -140,6 +179,41 @@ def test_runner_end_to_end_with_resume(spark, tmp_path):
     # lineage side-tables written per stage
     lin = spark.read.parquet(f"{out}/bronze_lineage")
     assert lin.agg(F.sum("doc_count")).first()[0] == 40
+
+
+def test_run_batch_raises_after_every_call_ends(spark):
+    """The gold batch helper returns results in call order, runs each call
+    under the caller's job group, and on failure raises the error only
+    after the other calls have returned, leaving no thread behind."""
+    import threading
+    import time
+
+    from pdfextractor_spark.pipeline.runner import _run_batch
+
+    sc = spark.sparkContext
+    threads, ended = [], []
+
+    def call(value=None, delay=0.0, fail=False):
+        def run():
+            threads.append(threading.current_thread())
+            time.sleep(delay)
+            if fail:
+                raise ValueError("gold build failed")
+            ended.append(value)
+            return value if value is not None else sc.getLocalProperty("spark.jobGroup.id")
+        return run
+
+    sc.setJobGroup("run-batch", "run-batch")
+    try:
+        assert _run_batch(spark, [call(1), call(), call(2, delay=0.1)]) == [1, "run-batch", 2]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    ended.clear()
+    with pytest.raises(ValueError, match="gold build failed"):
+        _run_batch(spark, [call(fail=True), call("slow", delay=0.5), call("quick")])
+    assert sorted(ended) == ["quick", "slow"]
+    assert len(threads) == 6 and not any(t.is_alive() for t in threads)
 
 
 def test_runner_partial_resume_processes_only_remaining(spark, tmp_path):

@@ -6,7 +6,7 @@ if results are still correct — the 100 TB early-warning gate."""
 import pytest
 
 import __spark_entry__ as entry_mod
-from pdfextractor_spark.plans.audit import (
+from tests.plan_audit import (
     codegen_span_count,
     join_strategies,
     num_exchanges,
@@ -134,7 +134,7 @@ def test_no_cartesian_join_in_any_query(spark, sf_dir, qs):
 def test_top_customers_is_take_ordered(spark, sf_dir, qs):
     """Global top-k must plan as TakeOrderedAndProject (per-partition top-10
     heaps merged), never a full sort or global window over all customers."""
-    from pdfextractor_spark.plans.audit import explain_str
+    from tests.plan_audit import explain_str
 
     df = qs["top_customers"](spark, sf_dir)
     assert "TakeOrderedAndProject" in explain_str(df, "simple")
