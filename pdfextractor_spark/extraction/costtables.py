@@ -1136,16 +1136,7 @@ PATTERNS: list[tuple[str, tuple, object, object]] = [
 
 REGISTERED_COST_PATTERNS = [p[0] for p in PATTERNS]
 
-# Conservative line pre-gate: every header_test above requires either a
-# dollar amount or one of these keyword stems somewhere in the line, so a
-# line failing this scan can never start a table — skipping it is a pure
-# optimization with identical semantics (the scan driver is O(lines x
-# patterns) otherwise, the hot loop of the whole silver stage).
 _SPAN_END_RX = re.compile(r"^(Goal|Objective|Section|Table\s+\d+)", re.I)
-
-_SCAN_GATE = re.compile(
-    r"\$[0-9]|practice|activit|bmp|item|watershed|projected|total", re.I
-)
 
 
 def parse_cost_tables_with_patterns(all_lines: list[str], raw_lines: list[str] | None = None) -> list[dict]:
@@ -1176,8 +1167,13 @@ def parse_cost_tables_with_patterns(all_lines: list[str], raw_lines: list[str] |
         if not line:
             continue
         low = line.lower()
-        # same alternatives as _SCAN_GATE, as C-level substring tests over
-        # the lowercased line (which the pattern-needle loop needs anyway)
+        # Conservative line pre-gate: every header_test in PATTERNS needs
+        # a dollar amount or one of these keyword stems in the line, so a
+        # line failing it can never start a table — skipping it is a pure
+        # optimization with identical semantics (the scan driver is
+        # O(lines x patterns) otherwise, the hot loop of the whole silver
+        # stage). C-level substring tests over the lowercased line (which
+        # the pattern-needle loop needs anyway).
         if ("total" not in low and "practice" not in low and "bmp" not in low
                 and "activit" not in low and "item" not in low
                 and "watershed" not in low and "projected" not in low

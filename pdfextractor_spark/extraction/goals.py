@@ -40,9 +40,7 @@ _RX_CONT_PUNCT = re.compile(r"^[\"“”'\-–—(\[]")
 _RX_TAB = re.compile(r"^\t")
 _RX_CONT_WORD = re.compile(r"^(and|to|for|that|which|it|this|these|those|in|on|by|of)\b", re.I)
 _RX_LOWER_NUM_START = re.compile(r"^[a-z0-9]")
-_RX_SOFT_END = re.compile(r"[a-z],?$")
 _RX_LOWER_START = re.compile(r"^[a-z]")
-_RX_HARD_END = re.compile(r"[.!;:]$")
 _RX_SEMIS = re.compile(r";+")
 _RX_ULT_GOAL = re.compile(r"(ultimate goal|overall goal|primary objective)", re.I)
 _RX_CONT_WORD2 = re.compile(r"^(and|the|to|for|that|which|it|this|these|those|in|on|by|of)\b", re.I)
@@ -56,7 +54,6 @@ _RX_CONT_WORD3 = re.compile(
 )
 _RX_DQUOTES = re.compile(r"[“”]")
 _RX_SQUOTES = re.compile(r"[‘’]")
-_RX_GOALS_WORD = re.compile(r"goals?", re.I)
 _RX_GOAL_WORD = re.compile(r"goal", re.I)
 _RX_VERBS = re.compile(r"(reduce|decrease|improve|achieve|attain)", re.I)
 _RX_HEAD_VERBS = re.compile(r"(reduce|decrease|improve|achieve|attain|protect|restore)", re.I)

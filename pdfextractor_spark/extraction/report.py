@@ -68,7 +68,6 @@ def _canonicalize_unit_full(u):
 # Precompiled legacy-parser patterns (identical literals to the inline
 # re.* calls they replace; these loops run per candidate line).
 _R_TOTAL_EST_PROJ = re.compile(r"Total Estimated Project Cost", re.I)
-_R_BMPS_ONLY = re.compile(r"^BMPs$", re.I)
 _R_ROW_MONEY_PAIR = re.compile(r"(.*?)(" + MONEY + r")(?:\s+\$([0-9][0-9,]*(?:\.[0-9]{2})?))?\s*$")
 _R_LEAD_DASH = re.compile(r"^[-•]+\s*")
 _R_SIZE_OR_NA = re.compile(r"(\b[0-9][0-9,]*\b.*@|\b[0-9][0-9,]*\b|N/A)")
@@ -79,7 +78,6 @@ _R_NUM_TOK = re.compile(r"([0-9][0-9,]*(?:\.[0-9]+)?)")
 _R_WS_SPLIT = re.compile(r"\s+")
 _R_LOW_DO = re.compile(r"Low DO/Organic", re.I)
 _R_PARTICIPANTS = re.compile(r"^Participants", re.I)
-_R_TOTAL_ONLY = re.compile(r"^Total\s*$", re.I)
 _R_MULTI_WS = re.compile(r"\s{2,}")
 _R_FEET_END = re.compile(r"\(feet\)$", re.I)
 _R_FEET_PAREN = re.compile(r"feet\)", re.I)
@@ -632,7 +630,6 @@ _LEGACY_CONFIDENCE = {
 }
 
 
-_LEGACY_GATE = re.compile(r"practice|activit|table|bmp|code|cost", re.I)
 _LG_FULL_PROJECT = re.compile(r"^\s*Cost Estimate:\s*Full Project Implementation", re.I)
 _LG_PHASE1 = re.compile(r"^\s*Cost Estimate:\s*Phase 1 Implementation", re.I)
 _LG_ACTIVITY_MATCH = re.compile(r"Activity.*Size.*Amount.*Estimated Cost.*Landowner Match", re.I)
@@ -733,14 +730,15 @@ def parse_cost_table(sections: dict, raw_text: str | None = None) -> dict:
                                     "patternId": "implementation_plan_coded_budget", "patternConfidence": 0.72})
             bmp_cost_tables_normalized.append(merged_normalized)
         # Legacy detection loop (reportBuilder.js:117-161). Every trigger
-        # below needs one of the gate keywords, so non-matching lines skip
+        # below needs one of the gate keywords (practice, activit, table,
+        # bmp, code, cost; case-insensitive), so non-matching lines skip
         # all twelve regexes (pure optimization, identical semantics).
         table_starts = []
         for i, l in enumerate(all_lines):
             if not l:
                 continue
-            # same needles as _LEGACY_GATE, as C-level substring tests —
-            # a case-insensitive regex scan per line was ~10x the cost
+            # the gate keywords as C-level substring tests — a
+            # case-insensitive regex scan per line was ~10x the cost
             _ll = l.lower()
             if ("cost" not in _ll and "table" not in _ll and "practice" not in _ll
                     and "bmp" not in _ll and "activit" not in _ll and "code" not in _ll):

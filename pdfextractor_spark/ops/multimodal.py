@@ -1,5 +1,5 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary`` columns
-with typed metadata, processed via Arrow-batched ``mapInPandas``.
+with typed metadata, processed via Arrow-batched ``session.map_rows``.
 
 Decode is REAL for every still-image format plus PCM audio — pure
 numpy/stdlib, no codec libraries needed: BMP (24/32-bit uncompressed),
@@ -31,10 +31,8 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -42,6 +40,7 @@ from pyspark.sql.types import (
     StringType, StructField, StructType,
 )
 
+from ..session import map_rows, salted
 from .limits import check_pixels
 
 __all__ = [
@@ -776,23 +775,17 @@ def _decode_payload(kind: str, payload: bytes) -> dict:
     )
 
 
-def _media_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for media_id, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-            row = {"media_id": media_id, "kind": kind,
-                   "n_bytes": len(payload) if payload is not None else 0,
-                   "sha1": hashlib.sha1(payload).hexdigest() if payload else None,
-                   "width": None, "height": None, "duration_sec": None,
-                   "feature": None, "meta_mismatch": None, "error": None}
-            try:
-                row.update(_decode_payload(kind, bytes(payload) if payload is not None else b""))
-            except NotImplementedError as e:
-                row["error"] = str(e)
-            except Exception as e:  # corrupt container: data, not a crash
-                row["error"] = f"decode failed: {type(e).__name__}: {e}"
-            rows.append(row)
-        yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_FEATURES_SCHEMA.fields])
+def _media_row(media_id, kind, payload) -> list[dict]:
+    row = {"media_id": media_id, "kind": kind,
+           "n_bytes": len(payload) if payload is not None else 0,
+           "sha1": hashlib.sha1(payload).hexdigest() if payload else None}
+    try:
+        row.update(_decode_payload(kind, bytes(payload) if payload is not None else b""))
+    except NotImplementedError as e:
+        row["error"] = str(e)
+    except Exception as e:  # corrupt container: data, not a crash
+        row["error"] = f"decode failed: {type(e).__name__}: {e}"
+    return [row]
 
 
 def decode_media(media_df: DataFrame, num_partitions: int | None = None) -> DataFrame:
@@ -800,10 +793,8 @@ def decode_media(media_df: DataFrame, num_partitions: int | None = None) -> Data
     (large blobs skew exactly like large documents). Arrow input batches
     are bounded by Spark's ``maxBytesPerBatch`` (64 MiB, set in
     ``session.py``), so a batch of multi-MB blobs cannot OOM a worker."""
-    spark = media_df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism * 2
-    salted = media_df.repartition(n, F.xxhash64("media_id"))
-    return salted.mapInPandas(_media_batches, schema=MEDIA_FEATURES_SCHEMA)
+    media = salted(media_df.select("media_id", "kind", "payload"), "media_id", num_partitions)
+    return map_rows(media, _media_row, MEDIA_FEATURES_SCHEMA)
 
 
 FRAME_SAMPLE_SCHEMA = StructType([
@@ -878,26 +869,12 @@ def sample_frames(media_df: DataFrame, every_nth: int = 10,
     Arrow input batches bounded by Spark's ``maxBytesPerBatch`` (64 MiB,
     set in ``session.py``) + salted repartition on media_id hash."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in FRAME_SAMPLE_SCHEMA.fields]
-        for pdf in it:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    frames = _sample_payload_frames(
-                        bytes(payload) if payload is not None else b"",
-                        every_nth, max_frames)
-                    rows.extend(dict(f, media_id=media_id) for f in frames)
-                except Exception as e:
-                    rows.append({"media_id": media_id, "track_id": None,
-                                 "codec": None, "frame_no": None,
-                                 "pts_sec": None, "width": None,
-                                 "height": None, "feature": None,
-                                 "error": f"{type(e).__name__}: {e}"})
-            yield pd.DataFrame(rows, columns=cols)
+    def frames(media_id, payload):
+        try:
+            return [dict(f, media_id=media_id) for f in _sample_payload_frames(
+                bytes(payload) if payload is not None else b"", every_nth, max_frames)]
+        except Exception as e:
+            return [{"media_id": media_id, "error": f"{type(e).__name__}: {e}"}]
 
-    spark = media_df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism * 2
     vids = media_df.where(F.col("kind") == "video").select("media_id", "payload")
-    salted = vids.repartition(n, F.xxhash64("media_id"))
-    return salted.mapInPandas(batches, schema=FRAME_SAMPLE_SCHEMA)
+    return map_rows(salted(vids, "media_id", num_partitions), frames, FRAME_SAMPLE_SCHEMA)

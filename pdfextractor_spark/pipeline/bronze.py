@@ -1,20 +1,18 @@
 """Bronze stage: pages -> extracted raw text.
 
-Spark plan: salted ``repartition(N, xxhash64(url))`` (defuses large-document
-skew: the ~1% of 50-100x docs spread uniformly instead of clumping in input
-file order) -> ``mapInPandas`` Arrow-batched extraction -> bronze parquet.
+Spark plan: the five page columns (six with ``content_type``) ->
+``session.salted`` on url (defuses large-document skew: the ~1% of 50-100x
+docs spread uniformly instead of clumping in input file order) ->
+``session.map_rows`` over ``_bronze_row`` -> bronze parquet.
 Per-row error capture: a corrupt payload never fails the job (SURVEY §4
 swallow-and-continue policy); failures are counted in lineage.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from ..session import map_rows, salted
 from .schema import BRONZE_SCHEMA
 
 __all__ = ["extract_bronze"]
@@ -68,40 +66,20 @@ def _extract_one(html: bytes | None, text: str | None,
         return None, "error", None, f"html: unexpected {type(e).__name__}: {e}", None
 
 
-def _bronze_batches_factory(html_mode: str = "default"):
-    def _bronze_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _bronze_batches_impl(batches, html_mode)
-    return _bronze_batches
-
-
-def _bronze_batches_impl(batches: Iterator[pd.DataFrame],
-                         html_mode: str = "default") -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {"url": [], "warc_ts": [], "lang": [], "raw_text": [], "parser": [],
-               "n_pages": [], "n_chars": [], "text_match": [], "error": [],
-               "encoding": []}
-        ctypes = (pdf["content_type"] if "content_type" in pdf.columns
-                  else [None] * len(pdf))
-        for url, warc_ts, html, text, lang, ctype in zip(
-            pdf["url"], pdf["warc_ts"], pdf["html"], pdf["text"], pdf["lang"],
-            ctypes
-        ):
-            raw_text, parser, n_pages, error, enc = _extract_one(
-                html, text if isinstance(text, str) else None,
-                ctype if isinstance(ctype, str) else None, html_mode)
-            out["url"].append(url)
-            out["warc_ts"].append(warc_ts)
-            out["lang"].append(lang)
-            out["raw_text"].append(raw_text)
-            out["parser"].append(parser)
-            out["n_pages"].append(n_pages)
-            out["n_chars"].append(len(raw_text) if raw_text is not None else None)
-            out["text_match"].append(
-                (raw_text == text) if (isinstance(text, str) and raw_text is not None) else None
-            )
-            out["error"].append(error)
-            out["encoding"].append(enc)
-        yield pd.DataFrame(out)
+def _bronze_row(url, warc_ts, html, text, lang, content_type=None,
+                html_mode: str = "default") -> dict:
+    """One pages row -> its bronze row (``BRONZE_SCHEMA``)."""
+    text = text if isinstance(text, str) else None
+    raw_text, parser, n_pages, error, enc = _extract_one(
+        html, text, content_type if isinstance(content_type, str) else None,
+        html_mode)
+    return {
+        "url": url, "warc_ts": warc_ts, "lang": lang, "raw_text": raw_text,
+        "parser": parser, "n_pages": n_pages,
+        "n_chars": len(raw_text) if raw_text is not None else None,
+        "text_match": (raw_text == text) if (text is not None and raw_text is not None) else None,
+        "error": error, "encoding": enc,
+    }
 
 
 def extract_bronze(pages_df: DataFrame, num_partitions: int | None = None,
@@ -110,8 +88,9 @@ def extract_bronze(pages_df: DataFrame, num_partitions: int | None = None,
         # fail fast: a typo silently running the wrong classifier over a
         # 100 TB corpus is far worse than an error at plan time
         raise ValueError(f"unknown html_mode {html_mode!r} (default|density)")
-    spark = pages_df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism * 2
-    salted = pages_df.repartition(n, F.xxhash64("url"))
-    return salted.mapInPandas(_bronze_batches_factory(html_mode),
-                              schema=BRONZE_SCHEMA)
+    cols = ["url", "warc_ts", "html", "text", "lang"]
+    if "content_type" in pages_df.columns:
+        cols.append("content_type")
+    return map_rows(salted(pages_df.select(*cols), "url", num_partitions),
+                    lambda *row: [_bronze_row(*row, html_mode=html_mode)],
+                    BRONZE_SCHEMA)

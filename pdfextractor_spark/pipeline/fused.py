@@ -1,4 +1,4 @@
-"""Fused extraction: pages -> silver in ONE Arrow-batched ``mapInPandas``.
+"""Fused extraction: pages -> silver in ONE Arrow-batched Python stage.
 
 When the bronze stage is not being checkpointed (pure-throughput runs, or
 clusters where recomputation is cheaper than materialization), fusing the
@@ -7,16 +7,13 @@ halves the Arrow serialization volume — the multi-KB raw text crosses the
 JVM<->Python boundary once instead of three times — and runs one python
 worker per task instead of two. The staged bronze -> silver path
 (``bronze.extract_bronze`` + ``silver.extract_silver``) remains the
-checkpoint/resume mode.
+checkpoint/resume mode. ``fused_row`` is the per-row function, shared with
+the streaming path (``streaming.stream.stream_extract``).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
     LongType,
@@ -25,9 +22,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import map_rows, salted
+from .bronze import _bronze_row
 from .schema import SILVER_SCHEMA
+from .silver import build_report_row
 
-__all__ = ["FUSED_SCHEMA", "extract_fused"]
+__all__ = ["FUSED_SCHEMA", "extract_fused", "fused_row"]
 
 FUSED_SCHEMA = StructType(
     list(SILVER_SCHEMA.fields)
@@ -38,35 +38,18 @@ FUSED_SCHEMA = StructType(
     ]
 )
 
-_COLS = [f.name for f in FUSED_SCHEMA.fields]
 
-
-def _fused_batches_factory(mode: str, bmp_filter: bool):
-    def _fused_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .bronze import _extract_one
-        from .silver import build_report_row
-
-        for pdf in batches:
-            rows = []
-            for url, html, text, lang in zip(pdf["url"], pdf["html"], pdf["text"], pdf["lang"]):
-                raw_text, parser, _n_pages, error, _enc = _extract_one(
-                    html, text if isinstance(text, str) else None
-                )
-                row = build_report_row(url, lang, raw_text, mode=mode, bmp_filter=bmp_filter)
-                if error is not None and row.get("error") is None:
-                    row["error"] = error
-                row["parser"] = parser
-                row["n_chars"] = len(raw_text) if raw_text is not None else None
-                row["text_match"] = (
-                    (raw_text == text) if (isinstance(text, str) and raw_text is not None) else None
-                )
-                rows.append(row)
-            # column-wise construction: pandas builds a DataFrame from a dict
-            # of lists without the per-row key alignment that list-of-dicts
-            # construction pays (measurable at Arrow-batch sizes)
-            yield pd.DataFrame({c: [r.get(c) for r in rows] for c in _COLS})
-
-    return _fused_batches
+def fused_row(url, html, text, lang, *, mode: str = "exact",
+              bmp_filter: bool = False) -> dict:
+    """One pages row -> its fused row: ``_bronze_row`` then
+    ``build_report_row``. A bronze error is kept only when the report has
+    none of its own."""
+    b = _bronze_row(url, None, html, text, lang)
+    row = build_report_row(url, lang, b["raw_text"], mode=mode, bmp_filter=bmp_filter)
+    if b["error"] is not None and row["error"] is None:
+        row["error"] = b["error"]
+    row.update(parser=b["parser"], n_chars=b["n_chars"], text_match=b["text_match"])
+    return row
 
 
 def extract_fused(pages_df: DataFrame, num_partitions: int | None = None,
@@ -75,7 +58,6 @@ def extract_fused(pages_df: DataFrame, num_partitions: int | None = None,
 
     Salted repartition on xxhash64(url) defuses large-document skew exactly
     as in the staged path."""
-    spark = pages_df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism * 2
-    salted = pages_df.select("url", "html", "text", "lang").repartition(n, F.xxhash64("url"))
-    return salted.mapInPandas(_fused_batches_factory(mode, bmp_filter), schema=FUSED_SCHEMA)
+    pages = salted(pages_df.select("url", "html", "text", "lang"), "url", num_partitions)
+    return map_rows(pages, lambda *row: [fused_row(*row, mode=mode, bmp_filter=bmp_filter)],
+                    FUSED_SCHEMA)

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import map_rows, salted
+
 __all__ = [
     "cost_table_rows",
     "gold_pattern_usage",
@@ -177,10 +179,9 @@ def discover_missing_cost_clusters(silver: DataFrame, bronze: DataFrame,
     (ref: backend/scripts/discover_missing_cost_clusters.js) — the miner
     that surfaced the §2.10 pattern backlog. Left-semi join prunes
     bronze to the missing set BEFORE any text moves (only urls shuffle);
-    the sequential per-doc scan runs as an Arrow-batched mapInPandas.
+    the sequential per-doc scan runs through ``session.map_rows``.
     Returns one row per cluster; rank the output by header_signature
     frequency to find the next pattern to implement."""
-    import pandas as pd
     from pyspark.sql.types import (ArrayType, IntegerType, StringType,
                                    StructField, StructType)
 
@@ -200,20 +201,10 @@ def discover_missing_cost_clusters(silver: DataFrame, bronze: DataFrame,
             .select("url", "raw_text")
             .where(F.col("raw_text").isNotNull()))
 
-    def scan(batches):
-        cols = [f.name for f in schema.fields]
-        for pdf in batches:
-            rows = []
-            for url, text in zip(pdf["url"], pdf["raw_text"]):
-                for c in find_cost_clusters(split_newlines(text or "")):
-                    rows.append({"url": url, **{k: c[k] for k in (
-                        "start_line", "end_line", "money_line_count",
-                        "header_signature", "sample")}})
-            yield pd.DataFrame(rows, columns=cols)
+    def clusters(url, text):
+        return [{"url": url, **c} for c in find_cost_clusters(split_newlines(text or ""))]
 
-    spark = bronze.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism * 2
-    return docs.repartition(n, F.xxhash64("url")).mapInPandas(scan, schema=schema)
+    return map_rows(salted(docs, "url", num_partitions), clusters, schema)
 
 
 _COST_HEADER_RE = (r"(?i)(Activity\s+Size/Amount\s+Estimated\s+Cost)"

@@ -1,19 +1,18 @@
 """Silver stage: bronze raw text -> structured ExtractedReport rows.
 
-One Arrow-batched ``mapInPandas`` runs the whole per-document pipeline
-(sectionize -> goals/BMPs/activities -> cost tables -> finalize) — the
-reference's multi-pass enrichment collapses into a single stage because each
-row carries its full document text (SURVEY §3.3).
+``session.map_rows`` runs ``build_report_row``, the whole per-document
+pipeline (sectionize -> goals/BMPs/activities -> cost tables -> finalize),
+over Arrow batches — the reference's multi-pass enrichment collapses into a
+single stage because each row carries its full document text (SURVEY §3.3).
 """
 
 from __future__ import annotations
 
 import json
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..session import map_rows
 from .schema import SILVER_SCHEMA
 
 __all__ = ["extract_silver", "report_to_silver_row"]
@@ -135,19 +134,10 @@ def build_report_row(url: str, lang: str | None, raw_text: str | None,
         return {"url": url, "lang": lang, **_EMPTY, "error": f"{type(e).__name__}: {e}"}
 
 
-def _silver_batches_factory(mode: str, bmp_filter: bool, classify: bool = False):
-    def _silver_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                build_report_row(url, lang, raw_text if isinstance(raw_text, str) else None,
-                                 mode=mode, bmp_filter=bmp_filter, classify=classify)
-                for url, lang, raw_text in zip(pdf["url"], pdf["lang"], pdf["raw_text"])
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in SILVER_SCHEMA.fields])
-    return _silver_batches
-
-
 def extract_silver(bronze_df: DataFrame, mode: str = "exact", bmp_filter: bool = False,
                    classify: bool = False) -> DataFrame:
-    cols = bronze_df.select("url", "lang", "raw_text")
-    return cols.mapInPandas(_silver_batches_factory(mode, bmp_filter, classify), schema=SILVER_SCHEMA)
+    def row(url, lang, raw_text):
+        return [build_report_row(url, lang, raw_text if isinstance(raw_text, str) else None,
+                                 mode=mode, bmp_filter=bmp_filter, classify=classify)]
+
+    return map_rows(bronze_df.select("url", "lang", "raw_text"), row, SILVER_SCHEMA)

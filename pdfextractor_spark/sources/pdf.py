@@ -170,15 +170,18 @@ def _get_stream(body: bytes) -> bytes | None:
 
 _STR_TOKEN = re.compile(rb"\((?:[^()\\]|\\.)*\)", re.S)
 _NUM = rb"[+-]?(?:\d+\.?\d*|\.\d+)"
-_TD_OP = re.compile(rb"(" + _NUM + rb")\s+(" + _NUM + rb")\s+(Td|TD)\b")
-_TM_OP = re.compile(
-    rb"(" + _NUM + rb")\s+(" + _NUM + rb")\s+(" + _NUM + rb")\s+(" + _NUM + rb")\s+("
-    + _NUM + rb")\s+(" + _NUM + rb")\s+Tm\b"
+# one alternative per text operator, in document order
+_TOKEN_RE = re.compile(
+    rb"(?P<str>\((?:[^()\\]|\\.)*\))\s*(?P<show>Tj|')"
+    rb"|(?P<tj>\[(?:[^\[\]()]|\((?:[^()\\]|\\.)*\))*\]\s*TJ)"
+    rb"|(?P<td>" + _NUM + rb")\s+(?P<td2>" + _NUM + rb")\s+(?P<tdop>Td|TD)\b"
+    rb"|(?P<tm>" + _NUM + rb"\s+" + _NUM + rb"\s+" + _NUM + rb"\s+" + _NUM + rb"\s+"
+    + _NUM + rb"\s+" + _NUM + rb")\s+Tm\b"
+    rb"|(?P<tl>" + _NUM + rb")\s+TL\b"
+    rb"|(?P<tstar>T\*)"
+    rb"|(?P<bt>BT\b)",
+    re.S,
 )
-_TL_OP = re.compile(rb"(" + _NUM + rb")\s+TL\b")
-_TSTAR = re.compile(rb"T\*")
-_TJ_SHOW = re.compile(rb"\)\s*(Tj|')")
-_TJ_ARRAY = re.compile(rb"\[((?:[^\[\]()]|\((?:[^()\\]|\\.)*\))*)\]\s*TJ", re.S)
 
 _UNESC = {b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\x08", b"f": b"\x0c",
           b"(": b"(", b")": b")", b"\\": b"\\"}
@@ -218,24 +221,10 @@ def _extract_items(content: bytes) -> list[tuple[float, float, str]]:
     """Walk text operators, tracking the text-position state machine; emit
     (x, y, string) per showing op. Supports Td/TD/Tm/T*/TL/Tj/TJ/'."""
     items: list[tuple[float, float, str]] = []
-    # Tokenize into (kind, ...) in document order by scanning op boundaries.
-    pos = 0
     x = y = 0.0
     line_x = line_y = 0.0
     leading = 0.0
-    n = len(content)
-    token_re = re.compile(
-        rb"(?P<str>\((?:[^()\\]|\\.)*\))\s*(?P<show>Tj|')"
-        rb"|(?P<tj>\[(?:[^\[\]()]|\((?:[^()\\]|\\.)*\))*\]\s*TJ)"
-        rb"|(?P<td>" + _NUM + rb")\s+(?P<td2>" + _NUM + rb")\s+(?P<tdop>Td|TD)\b"
-        rb"|(?P<tm>" + _NUM + rb"\s+" + _NUM + rb"\s+" + _NUM + rb"\s+" + _NUM + rb"\s+"
-        + _NUM + rb"\s+" + _NUM + rb")\s+Tm\b"
-        rb"|(?P<tl>" + _NUM + rb")\s+TL\b"
-        rb"|(?P<tstar>T\*)"
-        rb"|(?P<bt>BT\b)",
-        re.S,
-    )
-    for m in token_re.finditer(content):
+    for m in _TOKEN_RE.finditer(content):
         if m.group("bt"):
             x = y = line_x = line_y = 0.0
         elif m.group("tdop"):

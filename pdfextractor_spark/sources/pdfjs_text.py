@@ -1137,21 +1137,14 @@ class Font:
 # Content-stream tokenizer (operators + operands, inline-image aware)
 # ---------------------------------------------------------------------------
 
-_OP_RE = re.compile(rb"[A-Za-z'\"][A-Za-z0-9*'\"]*")
-
-
-_NUM_TOKEN = re.compile(rb"[+-]?(?:\d+\.\d*|\.\d+|\d+)")
-
-# whitespace + %-comment run: a comment ends before \r|\n, which the ws
-# class then consumes — same final position as Lexer.skip_ws for every input
-_WS_COMMENT_RUN = re.compile(rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*")
-
-# fused token scanner: ws/comment run + exactly one token alternative per
+# fused token scanner: ws/comment run (a comment ends before \r|\n, which
+# the ws class then consumes — same final position as Lexer.skip_ws for
+# every input) + exactly one token alternative per
 # call (number | operator | object-start delimiter | any other byte), so
 # the hot loop pays ONE C-level regex match per token instead of a skip
 # match plus a python char dispatch plus a class-specific match. The
 # alternatives reproduce the branch predicates of the previous loop:
-# group 1 = _NUM_TOKEN, group 2 = _OP_RE, group 3 = chars handed to
+# group 1 = a number, group 2 = an operator, group 3 = chars handed to
 # Lexer.parse_object (NOT consumed — parse_object re-reads from its
 # start), group 4 = any other byte (DOTALL for \n). Fails to match only
 # when nothing but trailing whitespace/comments remains. (An inline

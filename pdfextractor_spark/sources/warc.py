@@ -18,7 +18,7 @@ layout):
   ``Content-Type`` supplies the charset hint.
 
 Spark shape: ``read_warc`` lists the archive files with the binaryFile
-source and parses each file inside ``mapInPandas`` — one task per
+source and parses each file inside ``session.map_rows`` — one task per
 archive (CC segments are ~1 GB, the natural split), rows stream out as
 Arrow batches. Corrupt records surface as skipped-record counts in a
 final ``warc_error`` row per bad file, never a job failure.
@@ -148,34 +148,25 @@ def read_warc(spark, path: str, num_partitions: int | None = None,
               keep_content_type: bool = False):
     """WARC files under ``path`` (glob ok, .warc or .warc.gz) -> a pages
     DataFrame in PAGES_SCHEMA. One binaryFile row per archive; parsing
-    happens executor-side in mapInPandas.
+    happens executor-side in ``session.map_rows``.
 
     ``keep_content_type=True`` appends the HTTP ``Content-Type`` header
     as a sixth column: the transport-layer charset hint, which the
     extraction stage's WHATWG sniffing ranks between BOM and meta
     prescan (``pipeline/bronze`` consumes the column when present)."""
-    import pandas as pd
     from pyspark.sql.types import StringType, StructField, StructType
 
     from ..pipeline.schema import PAGES_SCHEMA
+    from ..session import map_rows
 
     schema = (StructType(list(PAGES_SCHEMA.fields)
                          + [StructField("content_type", StringType())])
               if keep_content_type else PAGES_SCHEMA)
 
-    def batches(it):
-        cols = [f.name for f in schema.fields]
-        for pdf in it:
-            rows = []
-            for name, content in zip(pdf["path"], pdf["content"]):
-                rows.extend(_pages_rows(name, content))
-            # DataFrame-from-records already selects exactly `columns`
-            yield pd.DataFrame(rows, columns=cols)
-
     files = spark.read.format("binaryFile").load(path).select("path", "content")
     if num_partitions:
         files = files.repartition(num_partitions)
-    return files.mapInPandas(batches, schema=schema)
+    return map_rows(files, _pages_rows, schema)
 
 
 def make_warc(records: list[dict], per_record_gzip: bool = False) -> bytes:

@@ -8,9 +8,10 @@ new page files with exactly-once sinks.
 - ``stream_pages``: file-source stream over a pages parquet directory; new
   files are discovered incrementally (the streaming analog of the reference's
   skip-if-exists directory scans).
-- ``stream_extract``: the SAME fused extraction UDF applied to the stream —
-  mapInPandas works unchanged on streaming DataFrames, so batch and
-  streaming share one code path (no drift between the two).
+- ``stream_extract``: the SAME per-row function as batch fused extraction
+  (``pipeline.fused.fused_row``) run through ``session.map_rows``, which
+  works unchanged on streaming DataFrames, so batch and streaming share
+  one code path (no drift between the two).
 - ``windowed_event_counts``: watermarked tumbling-window aggregation with
   late-data handling.
 - ``sessionize_events``: custom stateful operator via
@@ -36,8 +37,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..pipeline.fused import FUSED_SCHEMA, _fused_batches_factory
+from ..pipeline.fused import FUSED_SCHEMA, fused_row
 from ..pipeline.schema import PAGES_SCHEMA
+from ..session import map_rows
 
 __all__ = [
     "stream_pages",
@@ -66,7 +68,8 @@ def stream_extract(pages_stream: DataFrame, mode: str = "exact",
     file, and a shuffle would force stateful planning for no benefit — skew
     is bounded by maxFilesPerTrigger instead."""
     cols = pages_stream.select("url", "html", "text", "lang")
-    return cols.mapInPandas(_fused_batches_factory(mode, bmp_filter), schema=FUSED_SCHEMA)
+    return map_rows(cols, lambda *row: [fused_row(*row, mode=mode, bmp_filter=bmp_filter)],
+                    FUSED_SCHEMA)
 
 
 def dedup_stream(stream: DataFrame, key_cols: tuple[str, ...] = ("url",),

@@ -105,6 +105,45 @@ def test_stage_construction_leaves_session_confs_alone(spark):
         spark.conf.set(key, before)
 
 
+def test_salted_partition_count(spark):
+    from pdfextractor_spark.session import salted
+
+    df = spark.range(100).withColumnRenamed("id", "k")
+    assert salted(df, "k").rdd.getNumPartitions() == 2 * spark.sparkContext.defaultParallelism
+    assert salted(df, "k", num_partitions=3).rdd.getNumPartitions() == 3
+
+
+def test_map_rows_one_to_many_nulls_and_empty_batches(spark):
+    """A batch whose every row maps to no output must still reach Arrow as
+    a typed frame: a frame of empty lists is float64, which Arrow cannot
+    convert to array or struct columns. A key a row leaves out is null."""
+    from pyspark.sql.types import (ArrayType, IntegerType, LongType, StringType,
+                                   StructField, StructType)
+
+    from pdfextractor_spark.session import map_rows
+
+    schema = StructType([
+        StructField("k", LongType()),
+        StructField("tags", ArrayType(StringType())),
+        StructField("span", StructType([StructField("lo", IntegerType()),
+                                        StructField("hi", IntegerType())])),
+        StructField("note", StringType()),
+    ])
+
+    def fan(k, n):
+        return [{"k": k, "tags": [f"t{i}"], "span": {"lo": i, "hi": i + 1}} for i in range(n)]
+
+    # two input partitions; every row of the first fans out to nothing
+    rdd = spark.sparkContext.parallelize([(1, 0), (2, 0), (3, 2), (4, 1)], 2)
+    df = spark.createDataFrame(rdd, "k long, n long")
+    out = map_rows(df, fan, schema)
+    assert out.schema == schema
+    got = sorted((r["k"], r["tags"], tuple(r["span"]), r["note"]) for r in out.collect())
+    assert got == [(3, ["t0"], (0, 1), None), (3, ["t1"], (1, 2), None),
+                   (4, ["t0"], (0, 1), None)]
+    assert map_rows(df, lambda k, n: [], schema).collect() == []
+
+
 def test_unsalted_input_order_would_clump(spark):
     """Control: partitioning by input order (no salt) leaves the skew tail
     clumped when skewed docs are adjacent — demonstrating why the pipeline

@@ -34,13 +34,14 @@ def test_stream_extract_matches_batch(spark, tmp_path, pages_dir):
     q.awaitTermination(120)
     result = spark.read.parquet(out)
     assert result.count() == 60
-    # identical totals to the batch fused path
-    from pdfextractor_spark.pipeline.fused import extract_fused
+    # identical rows to the batch fused path, column for column
+    from pdfextractor_spark.pipeline.fused import FUSED_SCHEMA, extract_fused
 
     batch = extract_fused(spark.read.parquet(pages_dir), num_partitions=4)
-    b = batch.agg(F.sum("total_goals"), F.sum("total_bmps")).first()
-    s = result.agg(F.sum("total_goals"), F.sum("total_bmps")).first()
-    assert tuple(b) == tuple(s)
+    cols = FUSED_SCHEMA.fieldNames()
+    b = [r.asDict(recursive=True) for r in batch.orderBy("url").collect()]
+    s = [r.asDict(recursive=True) for r in result.select(*cols).orderBy("url").collect()]
+    assert len(b) == 60 and b == s
 
 
 def test_stream_extract_incremental_new_files(spark, tmp_path, pages_dir):
